@@ -187,6 +187,18 @@ def _should_materialize_source(source: DataFrame) -> bool:
     return any(m in js for m in _NONDET_JSON_MARKERS)
 
 
+def _chain_secondary(primary: BaseException, secondary: BaseException) -> None:
+    """Keep `secondary` reachable from `primary`, which stays the raised
+    error: append it to the end of primary's `__context__` chain, so
+    tracebacks print both."""
+    chain = [primary]
+    while (chain[-1].__context__ is not None
+           and chain[-1].__context__ not in chain):
+        chain.append(chain[-1].__context__)
+    if secondary not in chain:
+        chain[-1].__context__ = secondary
+
+
 class _Clause:
     __slots__ = ("kind", "condition", "values")
 
@@ -696,6 +708,13 @@ class MergeBuilder:
                     insert_df=resultw)
             adds = write_table_files(resultw.drop("__action"),
                                      self._out_snapshot(snapshot))
+        except BaseException as primary:
+            # the DV thread's own error would otherwise be lost
+            if dv_thread is not None:
+                dv_thread.join()
+            if "err" in dv_result:
+                _chain_secondary(primary, dv_result["err"])
+            raise
         finally:
             if dv_thread is not None:
                 dv_thread.join()

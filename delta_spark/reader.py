@@ -163,6 +163,16 @@ def read_files_df(
     return _geo.restore(out, logical_schema)
 
 
+# Summed DV cardinality (rows) at or below which a scan decodes the
+# deletion vectors on the driver and broadcasts them into the anti-join.
+# Above it, executors decode them so driver memory stays bounded.
+DV_DRIVER_DECODE_MAX_ROWS = 2_000_000
+
+
+def dv_total_small(dv_files) -> bool:
+    return sum(f.dv_cardinality for f in dv_files) <= DV_DRIVER_DECODE_MAX_ROWS
+
+
 def deleted_rows_df(spark: SparkSession, snapshot, files) -> Optional[DataFrame]:
     """DataFrame(file_base string, row_index long) of every
     DV-masked row across the given files, whatever the DV encoding:
@@ -170,49 +180,24 @@ def deleted_rows_df(spark: SparkSession, snapshot, files) -> Optional[DataFrame]
     - ``q`` (engine-native): parquet row-index sets, read directly —
       already distributed.
     - ``u``/``i``/``p`` (protocol RoaringBitmapArray, PROTOCOL.md
-      §Deletion Vectors): descriptors are exploded executor-side via
-      ``mapInPandas`` — each task decodes its files' compact roaring
-      blobs into row indexes, so the (potentially billions-of-rows)
-      expansion never lands on the driver.
+      §Deletion Vectors): at or below ``DV_DRIVER_DECODE_MAX_ROWS``
+      the blobs are decoded on the driver into a local relation that
+      the JVM explodes — no Python worker, no extra job. Above it,
+      executors decode them (``mapInPandas``) so the expansion never
+      lands on the driver.
     """
-    import os as _os
-
-    import pandas as pd  # noqa: F401 (imported for the worker closure)
-
     dfs = []
     q_dirs = sorted({f.deletionVector["pathOrInlineDv"] for f in files
                      if f.deletionVector and f.deletionVector["storageType"] == "q"})
     for d in q_dirs:
-        dfs.append(spark.read.parquet(_os.path.join(snapshot.table_path, d)))
+        dfs.append(spark.read.parquet(os.path.join(snapshot.table_path, d)))
     proto = [(file_key_of(snapshot.table_path, f), f.deletionVector)
              for f in files
              if f.deletionVector and f.deletionVector["storageType"] in ("u", "i", "p")]
     if proto:
-        table_path = snapshot.table_path
-        desc_df = spark.createDataFrame(
-            [(base, d["storageType"], d["pathOrInlineDv"],
-              int(d.get("offset") or 0), int(d["sizeInBytes"]))
-             for base, d in proto],
-            "file_base string, st string, pod string, offset long, size long")
-
-        def _explode(batches):
-            import pandas as _pd
-
-            from delta_spark import dv as _dv
-
-            for pdf in batches:
-                for r in pdf.itertuples():
-                    idx = _dv.descriptor_row_indexes(
-                        table_path, {"storageType": r.st, "pathOrInlineDv": r.pod,
-                                     "offset": r.offset, "sizeInBytes": r.size})
-                    yield _pd.DataFrame({"file_base": r.file_base,
-                                         "row_index": idx.astype("int64")})
-
-        from delta_spark.connect_compat import default_parallelism
-
-        n = min(len(proto), default_parallelism(spark))
-        dfs.append(desc_df.repartition(n).mapInPandas(
-            _explode, "file_base string, row_index long"))
+        decode = (_driver_decoded_rows if dv_total_small(files)
+                  else _executor_decoded_rows)
+        dfs.append(decode(spark, snapshot.table_path, proto))
     if not dfs:
         return None
     out = dfs[0]
@@ -221,46 +206,108 @@ def deleted_rows_df(spark: SparkSession, snapshot, files) -> Optional[DataFrame]
     return out
 
 
+def _driver_decoded_rows(spark: SparkSession, table_path: str,
+                         proto) -> DataFrame:
+    """Decode every descriptor here (size and CRC checked by
+    ``dv.descriptor_row_indexes``) into one row per file
+    ``(file_base, row_indexes array<long>)``; Arrow hands it to the JVM
+    as a local relation and ``explode`` runs there."""
+    import numpy as np
+    import pyarrow as pa
+
+    from delta_spark import dv as _dv
+
+    idx = [_dv.descriptor_row_indexes(table_path, d).astype(np.int64)
+           for _, d in proto]
+    offsets = np.zeros(len(idx) + 1, dtype=np.int32)
+    np.cumsum([len(i) for i in idx], out=offsets[1:])
+    table = pa.table({
+        "file_base": [base for base, _ in proto],
+        "row_indexes": pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(np.concatenate(idx)))})
+    return (spark.createDataFrame(
+                table, "file_base string, row_indexes array<long>")
+            .select("file_base", F.explode("row_indexes").alias("row_index")))
+
+
+def _executor_decoded_rows(spark: SparkSession, table_path: str,
+                           proto) -> DataFrame:
+    """One ``mapInPandas`` task per slice of descriptors decodes its
+    files' compact roaring blobs into row indexes."""
+    desc_df = spark.createDataFrame(
+        [(base, d["storageType"], d["pathOrInlineDv"],
+          int(d.get("offset") or 0), int(d["sizeInBytes"]))
+         for base, d in proto],
+        "file_base string, st string, pod string, offset long, size long")
+
+    def _explode(batches):
+        import pandas as _pd
+
+        from delta_spark import dv as _dv
+
+        for pdf in batches:
+            for r in pdf.itertuples():
+                idx = _dv.descriptor_row_indexes(
+                    table_path, {"storageType": r.st, "pathOrInlineDv": r.pod,
+                                 "offset": r.offset, "sizeInBytes": r.size})
+                yield _pd.DataFrame({"file_base": r.file_base,
+                                     "row_index": idx.astype("int64")})
+
+    from delta_spark.connect_compat import default_parallelism
+
+    n = min(len(proto), default_parallelism(spark))
+    return desc_df.repartition(n).mapInPandas(
+        _explode, "file_base string, row_index long")
+
+
+def _with_row_position(df: DataFrame) -> DataFrame:
+    """Tag each scanned row with `__file_base` (file_key_col) and
+    `__row_idx` (its position in the parquet file)."""
+    return (df.withColumn("__file_base", file_key_col())
+            .withColumn("__row_idx", F.col("_metadata.row_index")))
+
+
+def _drop_deleted_rows(spark: SparkSession, snapshot, df: DataFrame,
+                       files) -> DataFrame:
+    """Drop DV-masked rows from a `_with_row_position` scan of `files`
+    by a LEFT ANTI join on (file key, row index) — the DataFrame
+    analogue of DeltaParquetFileFormat.scala:194's IS_ROW_DELETED
+    filter. The sets are broadcast exactly when they are within the
+    bound under which `deleted_rows_df` decodes them on the driver.
+    Sound across DV generations because
+    every rewrite of a file's DV unions its predecessor (a stale set is
+    always a subset)."""
+    dv = deleted_rows_df(spark, snapshot, files)
+    if dv is None:
+        return df
+    if dv_total_small(files):
+        dv = F.broadcast(dv)
+    return df.join(dv, (df["__file_base"] == dv["file_base"])
+                   & (df["__row_idx"] == dv["row_index"]), "left_anti")
+
+
 def _read_dv_files(spark: SparkSession, snapshot, dv_files, schema,
                    part_cols, with_file_key: bool = False) -> DataFrame:
-    """Scan files that carry deletion vectors: rows are dropped by a
-    LEFT ANTI join on (file name, `_metadata.row_index`) against the DV
-    row-index sets (the DataFrame analogue of
-    DeltaParquetFileFormat.scala:194's IS_ROW_DELETED filter — fully
-    distributed, no Python in the row path). Sound across DV
-    generations because every rewrite of a file's DV unions its
-    predecessor (a stale set is always a subset)."""
-    import os as _os
-
+    """Scan files that carry deletion vectors, masked rows dropped."""
     paths = [_abs_path(snapshot.table_path, f) for f in dv_files]
     if part_cols:
         # cloned tables point at absolute paths under the SOURCE root —
         # basePath must be the files' common root for partition parsing
         if any(_is_absolute_add(snapshot.table_path, f) for f in dv_files):
-            base = _os.path.commonpath([_os.path.dirname(p) for p in paths])
+            base = os.path.commonpath([os.path.dirname(p) for p in paths])
             for _ in range(len(part_cols)):
-                if "=" in _os.path.basename(base):
-                    base = _os.path.dirname(base)
+                if "=" in os.path.basename(base):
+                    base = os.path.dirname(base)
             reader = spark.read.option("basePath", base)
         else:
             reader = spark.read.option("basePath", snapshot.table_path)
     else:
         reader = spark.read
-    df = (reader.schema(schema).parquet(*paths)
-          .withColumn("__dv_file", file_key_col())
-          .withColumn("__dv_idx", F.col("_metadata.row_index")))
-    dv = deleted_rows_df(spark, snapshot, dv_files)
-    dropped = df.join(
-        F.broadcast(dv) if dv_total_small(dv_files) else dv,
-        (df["__dv_file"] == dv["file_base"]) & (df["__dv_idx"] == dv["row_index"]),
-        "left_anti")
-    fk = ([F.col("__dv_file").alias("__cdf_file_key")]
+    df = _with_row_position(reader.schema(schema).parquet(*paths))
+    dropped = _drop_deleted_rows(spark, snapshot, df, dv_files)
+    fk = ([F.col("__file_base").alias("__cdf_file_key")]
           if with_file_key else [])
     return dropped.select(*[f.name for f in schema.fields], *fk)
-
-
-def dv_total_small(dv_files, threshold: int = 2_000_000) -> bool:
-    return sum(f.dv_cardinality for f in dv_files) <= threshold
 
 
 def materialized_row_id_col(snapshot) -> Optional[str]:
@@ -286,8 +333,6 @@ def read_files_with_index(spark: SparkSession, snapshot, files,
     ``request_materialized_row_id``, the table's materialized row-id
     column is also requested (null-filled for files that never
     materialized it)."""
-    import os as _os
-
     from delta_spark import geo as _geo
 
     schema = snapshot.schema
@@ -321,18 +366,13 @@ def read_files_with_index(spark: SparkSession, snapshot, files,
     read_schema = _geo.binary_read_schema(read_schema)
     paths = [_abs_path(snapshot.table_path, f) for f in files]
     reader = spark.read.option("basePath", snapshot.table_path) if part_cols else spark.read
-    df = (reader.schema(read_schema).parquet(*paths)
-          .withColumn("__file_base", file_key_col())
-          .withColumn("__row_idx", F.col("_metadata.row_index")))
+    df = _with_row_position(reader.schema(read_schema).parquet(*paths))
     if snapshot.column_mapping_enabled:
         df = df.select(*([F.col(p.name).alias(l.name)
                           for p, l in zip(read_schema.fields, schema.fields)]
                          + [df[c] for c in mat_cols]
                          + [F.col("__file_base"), F.col("__row_idx")]))
-    dv = deleted_rows_df(spark, snapshot, files)
-    if dv is not None:
-        df = df.join(dv, (df["__file_base"] == dv["file_base"]) &
-                     (df["__row_idx"] == dv["row_index"]), "left_anti")
+    df = _drop_deleted_rows(spark, snapshot, df, files)
     return _geo.restore(df, schema)
 
 

@@ -418,6 +418,38 @@ def test_dv_merge_no_rewrite(spark, tmp_table, sf_dir):
         out.join(victims, "o_orderkey", "left_semi").count()
 
 
+def test_dv_merge_keeps_dv_thread_error(spark, tmp_table, monkeypatch):
+    """When the new-file write and the concurrent DV job of a DV MERGE
+    both fail, the write's error is raised and the DV job's error stays
+    reachable from it."""
+    import delta_spark.commands.delete as D
+    import delta_spark.commands.merge as M
+
+    write_delta(spark.range(100).withColumnRenamed("id", "k"), tmp_table,
+                configuration={"delta.enableDeletionVectors": "true"})
+
+    def dv_fails(*args, **kwargs):
+        raise RuntimeError("dv job failed")
+
+    def write_fails(*args, **kwargs):
+        raise RuntimeError("file write failed")
+
+    monkeypatch.setattr(D, "mask_rows_with_dvs", dv_fails)
+    monkeypatch.setattr(M, "write_table_files", write_fails)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    src = spark.range(0, 10).withColumnRenamed("id", "k")
+    with pytest.raises(RuntimeError, match="file write failed") as ei:
+        (dt.merge(src, "target.k = source.k")
+           .whenMatchedUpdate(set={"k": "source.k + 1000"})
+           .execute())
+    chain, e = [], ei.value
+    while e is not None and e not in chain:
+        chain.append(e)
+        e = e.__context__
+    assert "dv job failed" in [str(x) for x in chain]
+    assert dt.toDF().count() == 100   # nothing committed
+
+
 def test_dv_merge_cdf_and_nbs(spark, tmp_table, sf_dir):
     """DV MERGE with CDF + not-matched-by-source clauses: change rows
     match the rewrite path's, and nbs deletes mask whole-table rows."""

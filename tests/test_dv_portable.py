@@ -16,13 +16,24 @@ CONF = {"delta.enableDeletionVectors": "true",
         "delta_spark.dv.portable": "true"}
 
 
+@pytest.fixture(params=["driver", "executor"])
+def dv_decode_side(request, monkeypatch):
+    """Run the test with deletion vectors decoded on the driver (the
+    default below the bound) and, with the bound at 0, on executors."""
+    if request.param == "executor":
+        import delta_spark.reader as R
+
+        monkeypatch.setattr(R, "DV_DRIVER_DECODE_MAX_ROWS", 0)
+    return request.param
+
+
 def _li(spark, sf_dir):
     from delta_spark.datasets import load_table
 
     return load_table(spark, sf_dir, "lineitem").limit(600)
 
 
-def test_portable_dv_delete_and_read(spark, tmp_table, sf_dir):
+def test_portable_dv_delete_and_read(spark, tmp_table, sf_dir, dv_decode_side):
     df = _li(spark, sf_dir)
     write_delta(df, tmp_table, configuration=CONF)
     dt = DeltaTable.forPath(spark, tmp_table)
@@ -75,7 +86,7 @@ def test_portable_dv_checkpoint_replay(spark, tmp_table, sf_dir):
     assert DeltaTable.forPath(spark, tmp_table).toDF().count() == want
 
 
-def test_portable_dv_clone_and_vacuum(spark, tmp_table, tmp_path, sf_dir):
+def test_portable_dv_clone_and_vacuum(spark, tmp_table, tmp_path, sf_dir, dv_decode_side):
     df = _li(spark, sf_dir).limit(400)
     write_delta(df, tmp_table, configuration=CONF)
     dt = DeltaTable.forPath(spark, tmp_table)
@@ -103,7 +114,7 @@ def test_portable_dv_clone_and_vacuum(spark, tmp_table, tmp_path, sf_dir):
     assert dt.toDF().count() == want2
 
 
-def test_inline_dv_descriptor_read(spark, tmp_table, sf_dir):
+def test_inline_dv_descriptor_read(spark, tmp_table, sf_dir, dv_decode_side):
     """Engine reads 'i' (inline z85) descriptors — written here by
     hand-editing the log, as a reader-compatibility check."""
     df = _li(spark, sf_dir).limit(100).coalesce(1)
@@ -121,6 +132,25 @@ def test_inline_dv_descriptor_read(spark, tmp_table, sf_dir):
                         dataChange=True, stats=f.stats, deletionVector=inline)],
                "DELETE", {}, {})
     assert DeltaTable.forPath(spark, tmp_table).toDF().count() == df.count() - 3
+
+
+def test_corrupt_dv_blob_fails_read(spark, tmp_table, sf_dir, dv_decode_side):
+    """A flipped byte inside a deletion_vector_*.bin blob fails the
+    read with the checksum error, whichever side decodes it."""
+    write_delta(_li(spark, sf_dir).limit(200), tmp_table, configuration=CONF)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    dt.delete("l_quantity > 40")
+    snap = DeltaLog.for_table(tmp_table).update()
+    d0 = next(f.deletionVector for f in snap.all_files if f.deletionVector)
+    path = dvmod.absolute_dv_path(tmp_table, d0)
+    with open(path, "r+b") as fh:
+        pos = int(d0["offset"]) + 4 + 5   # inside the data, past the size
+        fh.seek(pos)
+        b = fh.read(1)
+        fh.seek(pos)
+        fh.write(bytes([b[0] ^ 0xFF]))
+    with pytest.raises(Exception, match="DV checksum mismatch"):
+        dt.toDF().count()
 
 
 def test_max_row_index_validation(spark, tmp_table, sf_dir):

@@ -354,3 +354,43 @@ def test_limit_pushdown_accounts_for_dvs(spark, tmp_table):
     # 15 valid rows require BOTH files (2 + 10 < 15 is false, but
     # 10 alone < 15 and 2 alone < 15)
     assert len(files) == 2
+
+
+_PYTHON_NODES = ("MapInPandas", "PythonMapInArrow", "PythonUDF",
+                 "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas")
+
+
+def test_small_dv_scan_runs_no_python(spark, tmp_table, monkeypatch):
+    """Below the driver-decode bound, a DV scan decodes the deletion
+    vectors on the driver: the plan has no Python node and drops the
+    masked rows by a broadcast LEFT ANTI join. DV DELETE's reads of the
+    existing vectors take the same path."""
+    import delta_spark.reader as R
+
+    write_delta(spark.range(0, 2000, numPartitions=4).withColumnRenamed(
+        "id", "a"), tmp_table,
+        configuration={"delta.enableDeletionVectors": "true"})
+    dt = DeltaTable.forPath(spark, tmp_table)
+    dt.delete("a % 7 = 0")
+    plan = _plan(dt.toDF())
+    assert not [n for n in _PYTHON_NODES if n in plan], plan
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert dt.toDF().count() == 2000 - len(range(0, 2000, 7))
+
+    dv_reads = []
+    orig = R.deleted_rows_df
+
+    def spy(*args):
+        out = orig(*args)
+        dv_reads.append(out)
+        return out
+
+    monkeypatch.setattr(R, "deleted_rows_df", spy)
+    dt.delete("a % 5 = 0")
+    # the visible-row scan and the old-DV union both read existing DVs
+    assert len(dv_reads) >= 2
+    for d in dv_reads:
+        plan = _plan(d)
+        assert not [n for n in _PYTHON_NODES if n in plan], plan
+    assert dt.toDF().count() == len(
+        [a for a in range(2000) if a % 7 and a % 5])
