@@ -33,13 +33,16 @@ from __future__ import annotations
 
 import json
 import re
-from typing import Optional
+from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F, types as T
 
 from delta_spark.commands.delete import cdf_enabled, match_files_by_name
+from delta_spark.commands.update import resolve_set_exprs, set_target_parts
 from delta_spark.log import DeltaLog
 from delta_spark.reader import read_files_df
+from delta_spark.schema import (default_values, quote_ident,
+                                relax_nullability, sql_fragment, sql_type)
 from delta_spark.stats import DEFAULT_NUM_INDEXED_COLS
 from delta_spark.transaction import OptimisticTransaction, dml_transaction
 from delta_spark.writer import write_cdc_files, write_table_files
@@ -47,12 +50,6 @@ from delta_spark.writer import write_cdc_files, write_table_files
 
 class MergeError(Exception):
     pass
-
-
-class _ValueColumnFallback(Exception):
-    """Internal: the one-string SQL fast path of _value_column cannot
-    express this clause (nested struct-field SET) or the type's DDL
-    text failed to parse — use the Column-building path."""
 
 
 def _sqlify(x):
@@ -187,6 +184,17 @@ def _should_materialize_source(source: DataFrame) -> bool:
     return any(m in js for m in _NONDET_JSON_MARKERS)
 
 
+def _row_metrics(obs: Observation) -> dict[str, str]:
+    """operationMetrics row counts from the phase-2 observation."""
+    m = obs.get
+    return {
+        "numTargetRowsUpdated": str(m.get("updated") or 0),
+        "numTargetRowsDeleted": str(m.get("deleted") or 0),
+        "numTargetRowsInserted": str(m.get("inserted") or 0),
+        "numTargetRowsCopied": str(m.get("copied") or 0),
+    }
+
+
 def _chain_secondary(primary: BaseException, secondary: BaseException) -> None:
     """Keep `secondary` reachable from `primary`, which stays the raised
     error: append it to the end of primary's `__context__` chain, so
@@ -281,7 +289,8 @@ class MergeBuilder:
 
     def _expand_star(self, clause: _Clause, cols: list[str]) -> dict[str, str]:
         if clause.values.get("*") == "*":
-            out = {c: f"{self.src}.{c}" for c in cols}
+            src = quote_ident(self.src)
+            out = {quote_ident(c): f"{src}.{quote_ident(c)}" for c in cols}
             if clause.kind == "update":
                 # UPDATE SET * never touches IDENTITY columns — they
                 # keep the matched row's value (the explicit-key
@@ -290,26 +299,16 @@ class MergeBuilder:
 
                 for c in identity_info(getattr(self, "_schema", None)
                                        or T.StructType([])):
-                    out.pop(c, None)
+                    out.pop(quote_ident(c), None)
             return out
         return clause.values
-
-    def _set_key_parts(self, k: str) -> list[str]:
-        """SET/INSERT target → identifier parts: optionally backquoted,
-        target-alias prefix stripped (DeltaMergeActionResolver)."""
-        from delta_spark.commands.update import _split_ident
-
-        parts = _split_ident(k)
-        if len(parts) > 1 and parts[0].lower() == self.tgt.lower():
-            parts = parts[1:]
-        return parts
 
     def _insert_values_map(self, vals: dict[str, str]) -> dict[str, str]:
         """INSERT values keyed by case-folded top-level column; nested
         paths are not insertable (matching the reference)."""
         out = {}
         for k, sql in vals.items():
-            parts = self._set_key_parts(k)
+            parts = set_target_parts(k, self.tgt)
             if len(parts) > 1:
                 raise MergeError(
                     f"INSERT target must be a top-level column: {k!r}")
@@ -438,7 +437,7 @@ class MergeBuilder:
             if cl.kind == "delete" or cl.values.get("*") == "*":
                 continue
             for k in cl.values:
-                top = self._set_key_parts(k)[0].lower()
+                top = set_target_parts(k, self.tgt)[0].lower()
                 if top not in fold:
                     raise MergeError(
                         f"{cl.kind.upper()} target {k!r} is not a column of "
@@ -547,15 +546,12 @@ class MergeBuilder:
                   .join(src_df.alias(self.src), F.expr(self.condition), join_type))
 
         obs = Observation("merge_metrics")
-        joined = (joined.withColumn("__action", self._action_col())
+        joined = (joined.withColumn("__action", F.expr(self._action_sql()))
                   .observe(obs, *self._metric_cols()))
 
         kept = joined.filter(self._KEEP_SQL)
-        if not row_tracked:
-            projected = self._project_outputs(kept, cols, snapshot)
-        else:
-            out_cols = [self._value_column(c, snapshot).alias(c)
-                        for c in cols]
+        extra = []
+        if row_tracked:
             # copied + updated target rows keep their stable row id;
             # updated rows take the new commit version (null → default);
             # inserted rows are brand new (null both → defaults)
@@ -564,18 +560,18 @@ class MergeBuilder:
                 materialized_row_id_col,
             )
 
+            tgt = quote_ident(self.tgt)
             mat = materialized_row_id_col(snapshot)
             matv = materialized_row_commit_col(snapshot)
             if mat is not None:
-                out_cols.append(
-                    F.when(F.col("__action").startswith("i"),
-                           F.lit(None).cast("long"))
-                    .otherwise(touched_df[mat]).alias(mat))
+                extra.append(
+                    f"CASE WHEN __action LIKE 'i%' THEN CAST(NULL AS BIGINT) "
+                    f"ELSE {tgt}.{quote_ident(mat)} END AS {quote_ident(mat)}")
             if matv is not None:
-                out_cols.append(
-                    F.when(F.col("__action") == "copy", touched_df[matv])
-                    .otherwise(F.lit(None).cast("long")).alias(matv))
-            projected = kept.select(*out_cols, F.col("__action"))
+                extra.append(
+                    f"CASE WHEN __action = 'copy' THEN {tgt}.{quote_ident(matv)} "
+                    f"ELSE CAST(NULL AS BIGINT) END AS {quote_ident(matv)}")
+        projected = self._project_outputs(kept, cols, extra)
         resultw = self._finalize_inserts(self._apply_generated_merge(
             projected, snapshot, keep_action=True), snapshot)
         from delta_spark.util import scoped_dml_shuffle_width as _scoped_w
@@ -594,16 +590,7 @@ class MergeBuilder:
             adds = write_table_files(resultw.drop("__action"),
                                      self._out_snapshot(snapshot))
         removes = [f.remove() for f in touched]
-        try:
-            m = obs.get
-            metrics = {
-                "numTargetRowsUpdated": str(m.get("updated") or 0),
-                "numTargetRowsDeleted": str(m.get("deleted") or 0),
-                "numTargetRowsInserted": str(m.get("inserted") or 0),
-                "numTargetRowsCopied": str(m.get("copied") or 0),
-            }
-        except Exception:
-            metrics = {}
+        metrics = _row_metrics(obs)
         metrics["numTargetFilesRemoved"] = str(len(removes))
         metrics["numTargetFilesAdded"] = str(len(adds))
         evo = [self._evolution_meta] if self._evolution_meta is not None else []
@@ -640,7 +627,7 @@ class MergeBuilder:
                   .join(src_df.alias(self.src), F.expr(self.condition), join_type))
         obs = Observation("merge_metrics")
         joined = (joined
-                  .withColumn("__action", self._action_col())
+                  .withColumn("__action", F.expr(self._action_sql()))
                   .observe(obs, *self._metric_cols()))
         # the observe node sees every joined row (copies included) even
         # though downstream only consumes the changed subset
@@ -678,26 +665,25 @@ class MergeBuilder:
 
             written = changed.filter(
                 "__action LIKE 'u%' OR __action LIKE 'i%'")
-            if not row_tracked:
-                projected = self._project_outputs(written, cols, snapshot)
-            else:
-                out_cols = [self._value_column(c, snapshot).alias(c)
-                            for c in cols]
+            extra = []
+            if row_tracked:
                 # updated rows keep their stable id (materialized value,
                 # else default baseRowId+position); inserts are brand new;
                 # every output row takes the new commit's version
                 mat = materialized_row_id_col(snapshot)
                 matv = materialized_row_commit_col(snapshot)
                 if mat is not None:
-                    base = _base_row_id_expr(snapshot, touched,
-                                             "__file_base", "__row_idx")
-                    out_cols.append(
-                        F.when(F.col("__action").startswith("i"),
-                               F.lit(None).cast("long"))
-                        .otherwise(F.coalesce(touched_df[mat], base)).alias(mat))
+                    written = written.withColumn(
+                        "__base_row_id", _base_row_id_expr(
+                            snapshot, touched, "__file_base", "__row_idx"))
+                    extra.append(
+                        "CASE WHEN __action LIKE 'i%' THEN CAST(NULL AS BIGINT) "
+                        f"ELSE coalesce({quote_ident(self.tgt)}."
+                        f"{quote_ident(mat)}, __base_row_id) END "
+                        f"AS {quote_ident(mat)}")
                 if matv is not None:
-                    out_cols.append(F.lit(None).cast("long").alias(matv))
-                projected = written.select(*out_cols, F.col("__action"))
+                    extra.append(f"CAST(NULL AS BIGINT) AS {quote_ident(matv)}")
+            projected = self._project_outputs(written, cols, extra)
             resultw = self._finalize_inserts(self._apply_generated_merge(
                 projected, snapshot, keep_action=True), snapshot)
 
@@ -723,16 +709,7 @@ class MergeBuilder:
         if "err" in dv_result:
             raise dv_result["err"]
         dv_adds, removes, _ = dv_result["val"]
-        try:
-            m = obs.get
-            metrics = {
-                "numTargetRowsUpdated": str(m.get("updated") or 0),
-                "numTargetRowsDeleted": str(m.get("deleted") or 0),
-                "numTargetRowsInserted": str(m.get("inserted") or 0),
-                "numTargetRowsCopied": str(m.get("copied") or 0),
-            }
-        except Exception:
-            metrics = {}
+        metrics = _row_metrics(obs)
         metrics["numTargetFilesRemoved"] = str(len(removes))
         metrics["numTargetFilesAdded"] = str(len(adds))
         metrics["numDeletionVectorsAdded"] = str(len(dv_adds))
@@ -933,15 +910,15 @@ class MergeBuilder:
     _KEEP_SQL = "NOT (__action IN ('drop')) AND NOT (__action LIKE 'd%')"
 
     def _action_sql(self) -> str:
-        """__action as ONE SQL CASE text (the F.when cascade costs ~10
-        py4j round trips per clause). CASE semantics match the Column
-        chain exactly: a NULL clause condition falls through to the
-        next WHEN, which is what coalesce(cond, false) produced."""
+        """__action as ONE SQL CASE text: the first matching clause of
+        the row's category stamps its tag (an F.when cascade would cost
+        ~10 py4j round trips per clause). A NULL clause condition falls
+        through to the next WHEN."""
         def cascade(clauses: list[_Clause], prefix: str, default: str) -> str:
             whens = []
             for i, cl in enumerate(clauses):
                 tag = f"{cl.kind[0]}{prefix}{i}"
-                cond = f"({cl.condition})" if cl.condition else "true"
+                cond = sql_fragment(cl.condition) if cl.condition else "true"
                 whens.append(f"WHEN {cond} THEN '{tag}'")
             if not whens:
                 return f"'{default}'"
@@ -954,17 +931,6 @@ class MergeBuilder:
                 "AND __s_exists IS NOT NULL) "
                 f"THEN {m} WHEN (__t_exists IS NULL) THEN {i} "
                 f"ELSE {s} END")
-
-    def _action_col(self):
-        """The __action Column: one parsed CASE; Column-cascade
-        fallback if the composed text fails to parse."""
-        try:
-            return F.expr(self._action_sql())
-        except Exception:
-            is_matched = (F.col("__t_exists").isNotNull()
-                          & F.col("__s_exists").isNotNull())
-            return self._action_column(is_matched,
-                                       F.col("__t_exists").isNull())
 
     def _metric_cols(self):
         """The 4 observe() aggregates as parsed SQL (was 4 × ~50 py4j
@@ -981,24 +947,6 @@ class MergeBuilder:
             F.expr("sum(CASE WHEN __action = 'copy' THEN 1 ELSE 0 END)"
                    ).alias("copied"),
         ]
-
-    def _action_column(self, is_matched, is_src_only):
-        """First-matching-clause resolution within each row category."""
-        def cascade(clauses: list[_Clause], prefix: str, default: str):
-            expr = F.lit(default)
-            for i in reversed(range(len(clauses))):
-                cl = clauses[i]
-                tag = F.lit(f"{cl.kind[0]}{prefix}{i}")
-                cond = F.coalesce(F.expr(cl.condition), F.lit(False)) if cl.condition else F.lit(True)
-                expr = F.when(cond, tag).otherwise(expr)
-            return expr
-
-        matched_expr = cascade(self.matched, "m", "copy")
-        insert_expr = cascade(self.not_matched, "i", "drop")
-        nbs_expr = cascade(self.not_matched_by_source, "s", "copy")
-        return (F.when(is_matched, matched_expr)
-                 .when(is_src_only, insert_expr)
-                 .otherwise(nbs_expr))
 
     def _finalize_inserts(self, df, snapshot):
         """Identity allocation for merge-inserted rows (IdentityColumn
@@ -1018,7 +966,7 @@ class MergeBuilder:
             if cl.values.get("*") == "*":
                 explicit |= {c.lower() for c in self.source.columns}
             else:
-                explicit |= {self._set_key_parts(k)[0].lower()
+                explicit |= {set_target_parts(k, self.tgt)[0].lower()
                              for k in cl.values}
         # only insert-action rows need allocation + pinning; copied and
         # updated rows keep their existing identity values untouched
@@ -1065,8 +1013,8 @@ class MergeBuilder:
         return rest.unionByName(ins) if rest is not None else ins
 
     def _clause_tags(self):
-        """(action tag, clause) pairs — the same tag scheme
-        _action_column / _value_column stamp rows with."""
+        """(action tag, clause) pairs — the tags _action_sql stamps
+        rows with."""
         return ([(f"{c.kind[0]}m{i}", c) for i, c in enumerate(self.matched)]
                 + [(f"{c.kind[0]}i{i}", c) for i, c in enumerate(self.not_matched)]
                 + [(f"{c.kind[0]}s{i}", c) for i, c in enumerate(self.not_matched_by_source)])
@@ -1074,7 +1022,7 @@ class MergeBuilder:
     def _explicitly_assigns(self, cl, col: str) -> bool:
         if cl.values.get("*") == "*":
             return True
-        return any(self._set_key_parts(k)[0].lower() == col.lower()
+        return any(set_target_parts(k, self.tgt)[0].lower() == col.lower()
                    for k in cl.values)
 
     def _apply_generated_merge(self, df, snapshot, keep_action: bool = False):
@@ -1112,202 +1060,72 @@ class MergeBuilder:
                 .otherwise(F.col(c)).alias(c))
         return df.select(*out_cols)
 
-    @staticmethod
-    def _relax_nullability(dt):
-        from delta_spark.schema import relax_nullability
-
-        return relax_nullability(dt)
-
-    def _value_column(self, col: str, snapshot):
-        """Output value for one column as a CASE over __action.
-
-        Fast path: build the whole CASE as ONE SQL text and parse it
-        with a single F.expr. The Column-by-Column construction below
-        costs ~10 py4j round trips per clause (measured ~40 ms per
-        column per merge — ~0.25 s of driver time on a 6-column
-        2-clause merge; the one-string parse is ~0.3 ms). Branch
-        contents, evaluation semantics and casts are text-identical to
-        what the Column chain builds: every THEN branch is cast to the
-        relaxed column type and the whole CASE is cast once more, with
-        the ELSE copy branch only cast by the outer cast. Falls back to
-        the Column path for nested struct-field SETs (withField has no
-        plain-SQL spelling here) or any type whose DDL text fails to
-        parse."""
-        try:
-            sql = self._value_sql(col, snapshot)
-        except _ValueColumnFallback:
-            return self._value_column_cols(col, snapshot)
-        try:
-            return F.expr(sql)
-        except Exception:
-            return self._value_column_cols(col, snapshot)
-
-    def _project_outputs(self, kept: DataFrame, cols: list[str],
-                         snapshot) -> DataFrame:
-        """All output-column CASEs in ONE selectExpr parse (one py4j
-        round trip) instead of one F.expr + alias pair per column.
-        Falls back to the per-Column path when any column has no
-        plain-SQL spelling (nested struct SET, unparseable DDL) or the
-        combined statement fails to parse/analyze."""
-        sel = None
-        try:
-            sel = [f"({self._value_sql(c, snapshot)}) AS "
-                   f"`{c.replace('`', '``')}`" for c in cols]
-        except _ValueColumnFallback:
-            pass
-        if sel is not None:
-            try:
-                return kept.selectExpr(*sel, "`__action`")
-            except Exception:
-                pass
-        return kept.select(
-            *[self._value_column(c, snapshot).alias(c) for c in cols],
-            F.col("__action"))
-
-    def _value_sql(self, col: str, snapshot) -> str:
-        schema = getattr(self, "_schema", None) or snapshot.schema
-        dt = self._relax_nullability(schema[col].dataType)
-        dts = dt.simpleString()
-        tcols = getattr(self, "_target_cols",
-                        {f.name for f in snapshot.schema.fields})
-        base = (f"{self.tgt}.{col}" if col in tcols
-                else f"CAST(NULL AS {dts})")
+    def _project_outputs(self, df: DataFrame, cols: list[str],
+                         extra: Sequence[str] = ()) -> DataFrame:
+        """Output columns (then ``extra`` texts and __action) in ONE
+        selectExpr parse: one py4j round trip instead of one F.expr and
+        alias pair per column. Each output column is a CASE over
+        __action; every THEN branch is cast to the relaxed column type
+        and the whole CASE is cast once more."""
+        schema = self._schema
         schema_cols = [f.name for f in schema.fields]
-        whens = []
+        dflts = default_values(schema)
+        branches = []  # (tag, {output column: value SQL})
         for tag, cl in self._clause_tags():
             if cl.kind == "delete":
                 continue
             vals = self._expand_star(cl, schema_cols)
             if cl.kind == "insert":
+                # an omitted column takes its DEFAULT expression
+                # (DeltaColumnDefaults), else NULL
                 ins = self._insert_values_map(vals)
-                if col.lower() in ins:
-                    v = ins[col.lower()]
-                else:
-                    from delta_spark.schema import default_values
+                branches.append((tag, {c: ins.get(c.lower(), dflts.get(c, "NULL"))
+                                       for c in cols}))
+            else:
+                branches.append((tag, resolve_set_exprs(vals, schema,
+                                                        alias=self.tgt)))
+        tgt = quote_ident(self.tgt)
+        texts = []
+        for c in cols:
+            dts = sql_type(relax_nullability(schema[c].dataType))
+            # copy default; a schema-evolved column has no target value
+            base = (f"{tgt}.{quote_ident(c)}" if c in self._target_cols
+                    else f"CAST(NULL AS {dts})")
+            whens = " ".join(
+                f"WHEN __action = '{tag}' THEN "
+                f"CAST({sql_fragment(by_col.get(c, base))} AS {dts})"
+                for tag, by_col in branches)
+            case = f"CASE {whens} ELSE {base} END" if whens else base
+            texts.append(f"CAST(({case}) AS {dts}) AS {quote_ident(c)}")
+        return df.selectExpr(*texts, *extra, "`__action`")
 
-                    dflt = default_values(schema).get(col)
-                    v = dflt if dflt is not None else "NULL"
-            else:  # update
-                whole, nested = None, False
-                for k, sql in vals.items():
-                    parts = self._set_key_parts(k)
-                    if parts[0].lower() != col.lower():
-                        continue
-                    if len(parts) == 1:
-                        whole = sql
-                    else:
-                        nested = True
-                if nested:
-                    raise _ValueColumnFallback  # withField path
-                if whole is not None:
-                    v = whole
-                elif col in tcols:
-                    v = f"{self.tgt}.{col}"
-                else:
-                    v = "NULL"
-            whens.append(f"WHEN __action = '{tag}' "
-                         f"THEN CAST(({v}) AS {dts})")
-        if not whens:
-            return f"CAST(({base}) AS {dts})"
-        # the Column chain nests later clauses OUTERMOST; tags are
-        # disjoint so WHEN order is semantically irrelevant — keep
-        # declaration order for readability
-        return (f"CAST((CASE {' '.join(whens)} ELSE ({base}) END) "
-                f"AS {dts})")
-
-    def _value_column_cols(self, col: str, snapshot):
-        schema = getattr(self, "_schema", None) or snapshot.schema
-        dt = self._relax_nullability(schema[col].dataType)
-        if col in getattr(self, "_target_cols", {f.name for f in snapshot.schema.fields}):
-            expr = F.expr(f"{self.tgt}.{col}")  # copy default
-        else:
-            expr = F.lit(None).cast(dt)  # evolved column: target rows have no value
-        all_clauses = self._clause_tags()
-        schema_cols = [f.name for f in schema.fields]
-        for tag, cl in all_clauses:
-            if cl.kind == "delete":
-                continue
-            vals = self._expand_star(cl, schema_cols)
-            tcols = getattr(self, "_target_cols",
-                            {f.name for f in snapshot.schema.fields})
-            if cl.kind == "insert":
-                ins = self._insert_values_map(vals)
-                if col.lower() in ins:
-                    v = F.expr(ins[col.lower()])
-                else:
-                    # omitted column: DEFAULT expression when declared
-                    # (DeltaColumnDefaults), else NULL
-                    from delta_spark.schema import default_values
-
-                    dflt = default_values(schema).get(col)
-                    v = F.expr(dflt) if dflt is not None else F.lit(None)
-            else:  # update
-                whole, nested = None, []
-                for k, sql in vals.items():
-                    parts = self._set_key_parts(k)
-                    if parts[0].lower() != col.lower():
-                        continue
-                    if len(parts) == 1:
-                        whole = sql
-                    else:
-                        nested.append((parts[1:], sql))
-                if whole is not None:
-                    v = F.expr(whole)
-                elif nested:
-                    # struct-field updates in place, siblings preserved
-                    # (UpdateExpressionsSupport semantics)
-                    v = (F.expr(f"{self.tgt}.{col}") if col in tcols
-                         else F.lit(None).cast(dt))
-                    for path, sql in nested:
-                        v = v.withField(
-                            ".".join(f"`{p}`" for p in path), F.expr(sql))
-                elif col in tcols:
-                    v = F.expr(f"{self.tgt}.{col}")
-                else:
-                    # schema-evolved column absent from this UPDATE SET:
-                    # target rows have no pre-image value for it
-                    v = F.lit(None)
-            expr = F.when(F.col("__action") == tag, v.cast(dt)).otherwise(expr)
-        return expr.cast(dt)
-
-    def _write_cdf(self, joined, cols: list[str], snapshot, insert_df=None):
+    def _write_cdf(self, joined, cols: list[str], snapshot, insert_df):
         """Emit CDF rows: update_preimage/update_postimage, delete,
-        insert (MergeOutputGeneration CDF projection). With
-        ``insert_df`` (the finalized output frame, __action kept),
-        insert images are taken from it verbatim — identity values
-        allocated by _finalize_inserts land identically in the feed."""
-        def tgt_val(c):
-            # schema-evolved columns don't exist on the TARGET side of
-            # the join: preimage/delete rows show them as NULL
-            # (reference MergeOutputGeneration — the pre-merge rows
-            # never had a value)
-            if c in self._target_cols:
-                return F.expr(f"{self.tgt}.{c}")
-            dt = next(f.dataType for f in self._schema.fields
-                      if f.name == c)
-            return F.lit(None).cast(dt)
-
-        pre = (joined.filter(F.col("__action").startswith("u"))
-               .select(*[tgt_val(c).alias(c) for c in cols])
+        insert (MergeOutputGeneration CDF projection). Insert images
+        are taken verbatim from ``insert_df`` (the finalized output
+        frame, __action kept), so identity values allocated by
+        _finalize_inserts land identically in the feed."""
+        tgt = quote_ident(self.tgt)
+        # schema-evolved columns don't exist on the TARGET side of the
+        # join: preimage/delete rows show them as NULL (reference
+        # MergeOutputGeneration — the pre-merge rows never had a value)
+        tgt_vals = [
+            f"{tgt}.{quote_ident(c)}" if c in self._target_cols
+            else f"CAST(NULL AS {sql_type(self._schema[c].dataType)}) "
+                 f"AS {quote_ident(c)}"
+            for c in cols]
+        updated = joined.filter("__action LIKE 'u%'")
+        pre = (updated.selectExpr(*tgt_vals)
                .withColumn("_change_type", F.lit("update_preimage")))
         post = (self._apply_generated_merge(
-                    joined.filter(F.col("__action").startswith("u"))
-                    .select(*[self._value_column(c, snapshot).alias(c) for c in cols],
-                            F.col("__action")), snapshot)
+                    self._project_outputs(updated, cols), snapshot)
                 .withColumn("_change_type", F.lit("update_postimage")))
-        dels = (joined.filter(F.col("__action").startswith("d"))
-                .select(*[tgt_val(c).alias(c) for c in cols])
+        dels = (joined.filter("__action LIKE 'd%'")
+                .selectExpr(*tgt_vals)
                 .withColumn("_change_type", F.lit("delete")))
-        if insert_df is not None:
-            ins = (insert_df.filter(F.col("__action").startswith("i"))
-                   .select(*cols)
-                   .withColumn("_change_type", F.lit("insert")))
-        else:
-            ins = (self._apply_generated_merge(
-                       joined.filter(F.col("__action").startswith("i"))
-                       .select(*[self._value_column(c, snapshot).alias(c) for c in cols],
-                               F.col("__action")), snapshot)
-                   .withColumn("_change_type", F.lit("insert")))
+        ins = (insert_df.filter("__action LIKE 'i%'")
+               .select(*cols)
+               .withColumn("_change_type", F.lit("insert")))
         cdf_df = pre.unionByName(post).unionByName(dels).unionByName(ins)
         return write_cdc_files(cdf_df, snapshot.table_path, snapshot)
 

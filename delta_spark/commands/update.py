@@ -21,13 +21,14 @@ from __future__ import annotations
 
 from typing import Optional
 
-from pyspark.sql import SparkSession, functions as F
-
-from pyspark.sql import types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from delta_spark.commands.delete import cdf_enabled, find_touched_files
 from delta_spark.log import DeltaLog
 from delta_spark.reader import read_files_df
+from delta_spark.schema import (quote_ident, relax_nullability,
+                                resolve_field_path, sql_fragment, sql_type,
+                                update_struct_sql)
 from delta_spark.stats import DEFAULT_NUM_INDEXED_COLS
 from delta_spark.transaction import OptimisticTransaction, dml_transaction
 from delta_spark.writer import write_cdc_files, write_table_files
@@ -56,6 +57,15 @@ def _split_ident(k: str) -> list[str]:
         i += 1
     parts.append(cur)
     return [p.strip() for p in parts]
+
+
+def set_target_parts(k: str, alias: Optional[str] = None) -> list[str]:
+    """SET/INSERT target → identifier parts, with a leading MERGE
+    target-alias part stripped (DeltaMergeActionResolver)."""
+    parts = _split_ident(k)
+    if alias and len(parts) > 1 and parts[0].lower() == alias.lower():
+        parts = parts[1:]
+    return parts
 
 
 def apply_generated_after_update(df: DataFrame, schema: T.StructType,
@@ -89,68 +99,43 @@ def apply_generated_after_update(df: DataFrame, schema: T.StructType,
     return df
 
 
-def resolve_set_exprs(set_exprs: dict[str, str],
-                      schema: T.StructType) -> dict:
-    """{SET target: SQL expr} → ({top-level column: new-value Column},
-    {column: equivalent SQL text} or None when any target is a nested
-    struct field — withField has no plain-SQL spelling). The SQL map
-    feeds the one-string selectExpr projection in execute_update (same
-    driver-overhead rationale as merge._value_column_sql).
-    Targets resolve like Spark identifiers — optionally backquoted,
+def resolve_set_exprs(set_exprs: dict[str, str], schema: T.StructType,
+                      alias: Optional[str] = None) -> dict[str, str]:
+    """{SET target: SQL expr} → {top-level column: new-value SQL text},
+    the one expression text every DML projection embeds. Targets
+    resolve like Spark identifiers — optionally backquoted,
     case-insensitive — and dotted paths update ONE struct field in
     place, preserving its siblings (UpdateExpressionsSupport
-    generateUpdateExpressions). Values are cast to the target field's
-    declared type, matching the rewrite projection's old behavior."""
+    generateUpdateExpressions; schema.update_struct_sql). Values are
+    cast to the target field's relaxed declared type. With MERGE's
+    target ``alias``, a leading alias part is stripped from targets
+    and column references are qualified with it; UPDATE reads the bare
+    columns."""
+    qualifier = quote_ident(alias) + "." if alias else ""
     assigns: dict[str, list] = {}
-    by_fold = {f.name.lower(): f for f in schema.fields}
     for k, v in set_exprs.items():
-        parts = _split_ident(k)
-        f = by_fold.get(parts[0].lower())
-        if f is None:
-            raise ValueError(f"SET targets not in table schema: [{k!r}]")
-        path, dt = [], f.dataType
-        for p in parts[1:]:
-            if not isinstance(dt, T.StructType):
-                raise ValueError(
-                    f"SET target {k!r}: {'.'.join([f.name] + path)} "
-                    "is not a struct")
-            nf = {x.name.lower(): x for x in dt.fields}.get(p.lower())
-            if nf is None:
-                raise ValueError(f"SET targets not in table schema: [{k!r}]")
-            path.append(nf.name)
-            dt = nf.dataType
-        assigns.setdefault(f.name, []).append((tuple(path), v, dt))
-    from delta_spark.schema import relax_nullability
-
+        path = resolve_field_path(schema, set_target_parts(k, alias), k)
+        assigns.setdefault(path[0], []).append((path[1:], v))
     out = {}
-    out_sql: dict[str, str] | None = {}
     for col, lst in assigns.items():
-        whole = [a for a in lst if not a[0]]
-        if whole and len(lst) > 1:
-            raise ValueError(f"conflicting SET assignments to column {col!r}")
-        if whole:
-            out[col] = F.expr(whole[0][1]).cast(relax_nullability(whole[0][2]))
-            if out_sql is not None:
-                out_sql[col] = (f"CAST(({whole[0][1]}) AS "
-                                f"{relax_nullability(whole[0][2]).simpleString()})")
-            continue
-        out_sql = None  # nested struct SET: withField has no SQL spelling
-        seen: list = []
-        e = F.col(col)
-        for path, sql, dt in lst:
-            # overlapping paths (equal OR prefix-nested, e.g. s.a and
-            # s.a.b) are order-dependent last-wins — reject instead
-            for prev in seen:
-                n = min(len(prev), len(path))
-                if prev[:n] == path[:n]:
+        # overlapping targets (equal, or one a prefix of another: s and
+        # s.x, s.a and s.a.b) are order-dependent last-wins — reject
+        for i, (p, _) in enumerate(lst):
+            for q, _ in lst[:i]:
+                n = min(len(p), len(q))
+                if p[:n] == q[:n]:
                     raise ValueError(
                         f"conflicting SET assignments to column {col!r} "
-                        f"fields {'.'.join(prev)} and {'.'.join(path)}")
-            seen.append(path)
-            e = e.withField(".".join(f"`{p}`" for p in path),
-                            F.expr(sql).cast(relax_nullability(dt)))
-        out[col] = e
-    return out, out_sql
+                        f"fields {'.'.join((col,) + q)} and "
+                        f"{'.'.join((col,) + p)}")
+        dt = schema[col].dataType
+        if not lst[0][0]:
+            out[col] = (f"CAST({sql_fragment(lst[0][1])} AS "
+                        f"{sql_type(relax_nullability(dt))})")
+        else:
+            out[col] = update_struct_sql(qualifier + quote_ident(col), dt,
+                                         lst)
+    return out
 
 
 def execute_update(spark: SparkSession, log: DeltaLog, set_exprs: dict[str, str],
@@ -179,7 +164,7 @@ def execute_update(spark: SparkSession, log: DeltaLog, set_exprs: dict[str, str]
     cond = condition if condition and condition.strip() else "true"
 
     schema_cols = [f.name for f in snapshot.schema.fields]
-    upd, upd_sqls = resolve_set_exprs(set_exprs, snapshot.schema)
+    upd = resolve_set_exprs(set_exprs, snapshot.schema)
     from delta_spark.schema import identity_info
 
     for c in set(upd) & set(identity_info(snapshot.schema)):
@@ -193,8 +178,9 @@ def execute_update(spark: SparkSession, log: DeltaLog, set_exprs: dict[str, str]
         pass
 
     candidates = txn.files_for_scan(None if cond == "true" else cond)
+    cond_sql = f"COALESCE({sql_fragment(cond)}, FALSE)"
     if str(cfg.get("delta.enableDeletionVectors", "false")).lower() == "true":
-        return _dv_update(spark, txn, upd, cond, cfg, schema_cols,
+        return _dv_update(spark, txn, upd, cond, cond_sql, cfg, schema_cols,
                           candidates)
     touched = find_touched_files(spark, snapshot, candidates, cond)
     txn.read_files.update(f.path for f in touched)
@@ -213,67 +199,34 @@ def execute_update(spark: SparkSession, log: DeltaLog, set_exprs: dict[str, str]
         touched_df = read_files_with_stable_ids(spark, snapshot, touched)
     else:
         touched_df = read_files_df(spark, snapshot, touched)
-    cond_col = F.coalesce(F.expr(cond), F.lit(False))
-    mat = matv = None
+    # the whole rewrite projection is ONE selectExpr parse (~5 py4j
+    # round trips per column fewer than a Column chain — matters on
+    # wide tables)
+    texts = [
+        (f"CASE WHEN {cond_sql} THEN {upd[c]} "
+         f"ELSE {quote_ident(c)} END AS {quote_ident(c)}")
+        if c in upd else quote_ident(c)
+        for c in schema_cols
+    ]
     if row_tracked:
         # updated rows KEEP their stable row id but take the commit's
         # new row-commit-version (materialized column nulled → default)
         mat = materialized_row_id_col(snapshot)
         matv = materialized_row_commit_col(snapshot)
-    selected = None
-    if upd_sqls is not None:
-        # one-string fast path: the whole rewrite projection as ONE
-        # selectExpr call — text-identical CASE/CAST semantics to the
-        # Column chain below, minus ~5 py4j round trips per column of
-        # driver time (matters on wide tables; merge._value_column_sql
-        # is the same trade). Falls through on any DDL type text the
-        # parser rejects.
-        def bq(name: str) -> str:
-            return "`" + name.replace("`", "``") + "`"
-
-        cond_sql = f"COALESCE(({cond}), FALSE)"
-        texts = [
-            (f"CASE WHEN {cond_sql} THEN {upd_sqls[c]} "
-             f"ELSE {bq(c)} END AS {bq(c)}") if c in upd_sqls else bq(c)
-            for c in schema_cols
-        ]
         if mat is not None:
-            texts.append(bq(mat))
+            texts.append(quote_ident(mat))
         if matv is not None:
             texts.append(f"CASE WHEN {cond_sql} THEN CAST(NULL AS BIGINT) "
-                         f"ELSE {bq(matv)} END AS {bq(matv)}")
-        try:
-            selected = touched_df.selectExpr(*texts)
-        except Exception:
-            selected = None
-    if selected is None:
-        out_cols = [
-            (F.when(cond_col, upd[c])
-              .otherwise(F.col(c))).alias(c) if c in upd else F.col(c)
-            for c in schema_cols
-        ]
-        if mat is not None:
-            out_cols.append(touched_df[mat])
-        if matv is not None:
-            out_cols.append(
-                F.when(cond_col, F.lit(None).cast("long"))
-                .otherwise(touched_df[matv]).alias(matv))
-        selected = touched_df.select(*out_cols)
+                         f"ELSE {quote_ident(matv)} END AS {quote_ident(matv)}")
     projected = apply_generated_after_update(
-        selected, snapshot.schema, upd)
+        touched_df.selectExpr(*texts), snapshot.schema, upd)
     adds = write_table_files(projected, snapshot)
     removes = [f.remove() for f in touched]
 
     cdc = []
     if cdf_enabled(cfg):
-        pre = touched_df.filter(cond_col).withColumn("_change_type", F.lit("update_preimage"))
-        post = (apply_generated_after_update(
-                    touched_df.filter(cond_col)
-                    .select(*[upd[c].alias(c)
-                              if c in upd else F.col(c) for c in schema_cols]),
-                    snapshot.schema, upd)
-                .withColumn("_change_type", F.lit("update_postimage")))
-        cdc = write_cdc_files(pre.unionByName(post), snapshot.table_path, snapshot)
+        matched = touched_df.filter(cond_sql)
+        cdc = _write_update_cdf(matched, upd, schema_cols, snapshot)
 
     metrics = {
         "numRemovedFiles": str(len(removes)),
@@ -283,8 +236,26 @@ def execute_update(spark: SparkSession, log: DeltaLog, set_exprs: dict[str, str]
     return txn.commit(list(adds) + list(removes) + list(cdc), "UPDATE", params, metrics)
 
 
-def _dv_update(spark: SparkSession, log_txn, upd: dict,
-               cond: str, cfg: dict, schema_cols: list[str],
+def _post_update_texts(upd: dict[str, str], schema_cols: list[str]) -> list[str]:
+    """selectExpr texts of the post-update row (matched rows only)."""
+    return [f"{upd[c]} AS {quote_ident(c)}" if c in upd else quote_ident(c)
+            for c in schema_cols]
+
+
+def _write_update_cdf(matched: DataFrame, upd: dict[str, str],
+                      schema_cols: list[str], snapshot) -> list:
+    """update_preimage/update_postimage row pairs for the matched rows."""
+    pre = (matched.select(*schema_cols)
+           .withColumn("_change_type", F.lit("update_preimage")))
+    post = (apply_generated_after_update(
+                matched.selectExpr(*_post_update_texts(upd, schema_cols)),
+                snapshot.schema, upd)
+            .withColumn("_change_type", F.lit("update_postimage")))
+    return write_cdc_files(pre.unionByName(post), snapshot.table_path, snapshot)
+
+
+def _dv_update(spark: SparkSession, log_txn, upd: dict[str, str],
+               cond: str, cond_sql: str, cfg: dict, schema_cols: list[str],
                candidates) -> int:
     """Deletion-vector UPDATE (UpdateCommand.scala:139): mask the
     matched row positions with DVs and write ONLY the updated rows as
@@ -309,21 +280,18 @@ def _dv_update(spark: SparkSession, log_txn, upd: dict,
                               "false")).lower() == "true"
     visible = read_files_with_index(spark, snapshot, candidates,
                                     request_materialized_row_id=row_tracked)
-    cond_col = F.coalesce(F.expr(cond), F.lit(False))
-    matched = visible.filter(cond_col).persist()
+    matched = visible.filter(cond_sql).persist()
     try:
-        positions = matched.select(F.col("__file_base").alias("file_base"),
-                                   F.col("__row_idx").alias("row_index"))
+        positions = matched.selectExpr("__file_base AS file_base",
+                                       "__row_idx AS row_index")
         dv_adds, removes, updated_rows = mask_rows_with_dvs(
             spark, txn, candidates, positions)
         if updated_rows == 0 and not removes:
             return txn.commit([], "UPDATE", {"predicate": cond},
                               {"numUpdatedRows": "0"})
 
-        out_cols = [
-            upd[c].alias(c) if c in upd else F.col(c)
-            for c in schema_cols
-        ]
+        texts = _post_update_texts(upd, schema_cols)
+        out = matched
         if row_tracked:
             # updated rows KEEP their stable id (materialized value,
             # else default baseRowId+position) and take the new
@@ -331,26 +299,19 @@ def _dv_update(spark: SparkSession, log_txn, upd: dict,
             mat = materialized_row_id_col(snapshot)
             matv = materialized_row_commit_col(snapshot)
             if mat is not None:
-                base = _base_row_id_expr(snapshot, candidates,
-                                         "__file_base", "__row_idx")
-                out_cols.append(F.coalesce(matched[mat], base).alias(mat))
+                out = out.withColumn("__base_row_id", _base_row_id_expr(
+                    snapshot, candidates, "__file_base", "__row_idx"))
+                texts.append(f"coalesce({quote_ident(mat)}, __base_row_id) "
+                             f"AS {quote_ident(mat)}")
             if matv is not None:
-                out_cols.append(F.lit(None).cast("long").alias(matv))
+                texts.append(f"CAST(NULL AS BIGINT) AS {quote_ident(matv)}")
         new_adds = write_table_files(
-            apply_generated_after_update(matched.select(*out_cols),
+            apply_generated_after_update(out.selectExpr(*texts),
                                          snapshot.schema, upd), snapshot)
 
         cdc = []
         if cdf_enabled(cfg):
-            pre = (matched.select(*schema_cols)
-                   .withColumn("_change_type", F.lit("update_preimage")))
-            post = (apply_generated_after_update(
-                        matched.select(*[upd[c].alias(c)
-                                         if c in upd else F.col(c)
-                                         for c in schema_cols]),
-                        snapshot.schema, upd)
-                    .withColumn("_change_type", F.lit("update_postimage")))
-            cdc = write_cdc_files(pre.unionByName(post), snapshot.table_path, snapshot)
+            cdc = _write_update_cdf(matched, upd, schema_cols, snapshot)
     finally:
         matched.unpersist()
 

@@ -19,7 +19,9 @@ import json
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from delta_spark.schema import default_values, generation_expressions, identity_info
+from delta_spark.schema import (default_values, generation_expressions,
+                                identity_info, quote_ident, sql_fragment,
+                                sql_string)
 
 CONSTRAINT_PROP_PREFIX = "delta.constraints."
 
@@ -40,10 +42,7 @@ def check_constraints(configuration: dict[str, str]) -> dict[str, str]:
 def _invariant_guard_specs(df: DataFrame, schema: T.StructType,
                            configuration: dict[str, str]) -> list[tuple[str, str]]:
     """(condition_sql, error_message) per invariant, in enforcement
-    order. Condition texts are SQL in BOTH render paths (F.expr parsed
-    them before this refactor too); only the message literal differs
-    between the fast path (escaped into the CASE text) and the
-    fallback (F.lit)."""
+    order."""
     specs: list[tuple[str, str]] = []
 
     def add_notnull(path: str, guard):
@@ -59,12 +58,12 @@ def _invariant_guard_specs(df: DataFrame, schema: T.StructType,
         except Exception:
             raise ConstraintViolation(
                 f"unrecognized delta.invariants rule on {path}: {rule_json!r}")
-        specs.append((f"NOT COALESCE(({expr}), FALSE)",
+        specs.append((f"NOT COALESCE({sql_fragment(expr)}, FALSE)",
                       f"invariant ({expr}) violated on column {path}"))
 
     def walk(st: T.StructType, prefix: str, guard):
         for f in st.fields:
-            path = f"{prefix}`{f.name}`"
+            path = prefix + quote_ident(f.name)
             if not prefix and f.name not in df.columns:
                 continue
             if not f.nullable:
@@ -80,15 +79,9 @@ def _invariant_guard_specs(df: DataFrame, schema: T.StructType,
 
     walk(schema, "", None)
     for name, expr in check_constraints(configuration).items():
-        specs.append((f"NOT COALESCE(({expr}), FALSE)",
+        specs.append((f"NOT COALESCE({sql_fragment(expr)}, FALSE)",
                       f"CHECK constraint {name} ({expr}) violated"))
     return specs
-
-
-def _sql_str_lit(s: str) -> str:
-    """Escape into a Spark SQL single-quoted literal body (the default
-    parser processes backslash escapes)."""
-    return s.replace("\\", "\\\\").replace("'", "\\'")
 
 
 def enforce_invariants(df: DataFrame, schema: T.StructType, configuration: dict[str, str]) -> DataFrame:
@@ -98,30 +91,17 @@ def enforce_invariants(df: DataFrame, schema: T.StructType, configuration: dict[
     getFromSchema recurses into structs, not array/map elements) and
     legacy `delta.invariants` expression metadata (PersistedRule).
 
-    Fast path: the whole conjunction is built as ONE SQL text and
-    parsed by a single filter() call. Catalyst's CombineFilters merges
-    per-constraint chained filters into exactly this conjunction, so
-    the physical plan is identical — the one-string build only skips
-    ~9 py4j round trips plus one analysis pass PER CONSTRAINT of
-    driver time (measured ~14 ms/column per write on a 60-column
-    NOT NULL table). Falls back to the Column chain for any message
-    text the SQL parser rejects."""
+    The whole conjunction is ONE SQL text parsed by a single filter()
+    call: the plan Catalyst's CombineFilters makes of per-constraint
+    filters, without ~9 py4j round trips plus one analysis pass per
+    constraint of driver time (measured ~14 ms/column per write on a
+    60-column NOT NULL table)."""
     specs = _invariant_guard_specs(df, schema, configuration)
     if not specs:
         return df
-    try:
-        return df.filter(" AND ".join(
-            f"(CASE WHEN {cond} THEN CAST(RAISE_ERROR('{_sql_str_lit(msg)}') "
-            f"AS BOOLEAN) ELSE TRUE END)" for cond, msg in specs))
-    except Exception:
-        pass
-    out = df
-    for cond, msg in specs:
-        out = out.filter(
-            F.when(F.expr(cond),
-                   F.raise_error(F.lit(msg)).cast("boolean"))
-            .otherwise(F.lit(True)))
-    return out
+    return df.filter(" AND ".join(
+        f"(CASE WHEN {cond} THEN CAST(RAISE_ERROR({sql_string(msg)}) "
+        f"AS BOOLEAN) ELSE TRUE END)" for cond, msg in specs))
 
 
 def apply_generated_columns(df: DataFrame, schema: T.StructType) -> DataFrame:

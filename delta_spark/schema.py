@@ -228,6 +228,86 @@ def relax_nullability(dt: T.DataType) -> T.DataType:
     return dt
 
 
+# -- SQL text for DML row expressions ---------------------------------
+# MERGE, UPDATE and the write-path invariant guards build their row
+# expressions as ONE composed SQL text (one parse instead of ~10 py4j
+# round trips per Column node). Every identifier, type, string literal
+# and user fragment they emit goes through the helpers below.
+
+def quote_ident(name: str) -> str:
+    """Backquoted SQL identifier (`a b`, `x``y`)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(s: str) -> str:
+    """Single-quoted Spark SQL string literal (the default parser
+    processes backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_fragment(text: str) -> str:
+    """Parenthesized user SQL for embedding in composed text. The
+    newline ends a trailing `-- comment` before the closing paren, so
+    the comment cannot swallow the text that follows."""
+    return f"({text}\n)"
+
+
+def sql_type(dt: T.DataType) -> str:
+    """Type text the SQL parser reads back: simpleString(), except that
+    struct field names are backquoted (struct<`x y`:int>)."""
+    if isinstance(dt, T.StructType):
+        return "struct<" + ",".join(
+            f"{quote_ident(f.name)}:{sql_type(f.dataType)}"
+            for f in dt.fields) + ">"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{sql_type(dt.keyType)},{sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def resolve_field_path(schema: T.StructType, parts: list[str],
+                       key: str) -> tuple[str, ...]:
+    """SET target parts → declared field names from the top-level
+    column down. Parts resolve case-insensitively, like Spark
+    identifiers; ``key`` is the user's SET target, for errors."""
+    path: list[str] = []
+    dt: T.DataType = schema
+    for p in parts:
+        if not isinstance(dt, T.StructType):
+            raise ValueError(f"SET target {key!r}: "
+                             f"{'.'.join(path)} is not a struct")
+        f = {x.name.lower(): x for x in dt.fields}.get(p.lower())
+        if f is None:
+            raise ValueError(f"SET targets not in table schema: [{key!r}]")
+        path.append(f.name)
+        dt = f.dataType
+    return tuple(path)
+
+
+def update_struct_sql(base: str, dt: T.StructType,
+                      assigns: list[tuple[tuple[str, ...], str]]) -> str:
+    """SQL text of struct ``base`` (of type ``dt``) with the fields at
+    each resolved path replaced by a value SQL text, siblings kept:
+    ``IF(base IS NULL, NULL, named_struct(...))``, one level per path
+    part, the same result as Spark's UpdateFields expression, so a
+    NULL struct stays NULL. Values are cast to the field's relaxed
+    type."""
+    fields = []
+    for f in dt.fields:
+        ref = f"{base}.{quote_ident(f.name)}"
+        here = [(p[1:], v) for p, v in assigns if p[0] == f.name]
+        if not here:
+            val = ref
+        elif not here[0][0]:
+            val = (f"CAST({sql_fragment(here[0][1])} AS "
+                   f"{sql_type(relax_nullability(f.dataType))})")
+        else:
+            val = update_struct_sql(ref, f.dataType, here)
+        fields.append(f"{sql_string(f.name)}, {val}")
+    return f"IF({base} IS NULL, NULL, named_struct({', '.join(fields)}))"
+
+
 def _has_collations_key(node) -> bool:
     """True when the parsed field JSON carries the protocol's
     `__COLLATIONS` metadata KEY anywhere (a dict key, not a substring —

@@ -42,6 +42,22 @@ def test_special_names_work_with_mapping(spark, tmp_table):
     snap = DeltaLog.for_table(tmp_table).update()
     phys = snap.physical_map()
     assert all(" " not in p and "," not in p for p in phys.values())
+    # MERGE SET of a name that needs backquotes
+    src = spark.sql("SELECT 3 AS ok, 77 AS nv")
+    (dt.merge(src, "t.ok = s.ok", target_alias="t", source_alias="s")
+       .whenMatchedUpdate(set={"`a b`": "s.nv"}).execute())
+    assert [tuple(r) for r in dt.toDF().collect()] == [(77, 2, 3)]
+    # MERGE UPDATE/INSERT * into a struct whose field name needs quotes
+    path2 = tmp_table + "_struct"
+    write_delta(spark.sql("SELECT 1 AS id, named_struct('x y', 1, 'z', 'a') AS s"),
+                path2, configuration=NAME_CFG)
+    dt2 = DeltaTable.forPath(spark, path2)
+    src2 = spark.sql("SELECT * FROM VALUES (1, named_struct('x y', 5, 'z', 'b')), "
+                     "(2, named_struct('x y', 6, 'z', 'c')) AS v(id, s)")
+    (dt2.merge(src2, "t.id = s.id", target_alias="t", source_alias="s")
+        .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute())
+    assert sorted((r["id"], r["s"]["x y"], r["s"]["z"])
+                  for r in dt2.toDF().collect()) == [(1, 5, "b"), (2, 6, "c")]
 
 
 def test_schema_evolution_to_invalid_name_rejected(spark, tmp_table):
@@ -69,22 +85,32 @@ def test_set_targets_backquoted_and_case_insensitive(spark, tmp_table, sf_dir):
         dt.update(set={"nope": "'Y'"})
 
 
+_NULL_STRUCT_ROWS = (
+    "SELECT * FROM VALUES (1, named_struct('x', 10, 'y', 'a')), "
+    "(2, named_struct('x', 20, 'y', 'b')), "
+    "(3, CAST(NULL AS struct<x:int,y:string>)) AS t(id, s)")
+
+
+def _struct_rows(dt):
+    return {r["id"]: r["s"] and (r["s"]["x"], r["s"]["y"])
+            for r in dt.toDF().collect()}
+
+
 def test_nested_struct_set_target(spark, tmp_table):
-    df = spark.sql(
-        "SELECT * FROM VALUES (1, named_struct('x', 10, 'y', 'a')), "
-        "(2, named_struct('x', 20, 'y', 'b')) AS t(id, s)")
-    write_delta(df, tmp_table)
+    write_delta(spark.sql(_NULL_STRUCT_ROWS), tmp_table)
     dt = DeltaTable.forPath(spark, tmp_table)
     dt.update(set={"s.x": "s.x + 100"}, condition="id = 1")
-    rows = {r["id"]: (r["s"]["x"], r["s"]["y"]) for r in dt.toDF().collect()}
     # sibling field y survives the in-place struct-field update
-    assert rows == {1: (110, "a"), 2: (20, "b")}
+    assert _struct_rows(dt) == {1: (110, "a"), 2: (20, "b"), 3: None}
     # two-level nesting + case-insensitive path
     with pytest.raises(ValueError, match="not a struct"):
         dt.update(set={"id.x": "1"})
     dt.update(set={"S.Y": "'z'"}, condition="id = 2")
-    rows = {r["id"]: r["s"]["y"] for r in dt.toDF().collect()}
+    rows = {r["id"]: r["s"] and r["s"]["y"] for r in dt.toDF().collect()}
     assert rows[2] == "z"
+    # a NULL struct stays NULL (as Spark's UpdateFields leaves it)
+    dt.update(set={"s.x": "5"})
+    assert _struct_rows(dt) == {1: (5, "a"), 2: (5, "z"), 3: None}
 
 
 def test_conflicting_set_targets_rejected(spark, tmp_table):
@@ -96,15 +122,13 @@ def test_conflicting_set_targets_rejected(spark, tmp_table):
 
 
 def test_nested_set_target_dv_path(spark, tmp_table):
-    df = spark.sql(
-        "SELECT * FROM VALUES (1, named_struct('x', 10, 'y', 'a')), "
-        "(2, named_struct('x', 20, 'y', 'b')) AS t(id, s)")
-    write_delta(df, tmp_table,
+    write_delta(spark.sql(_NULL_STRUCT_ROWS), tmp_table,
                 configuration={"delta.enableDeletionVectors": "true"})
     dt = DeltaTable.forPath(spark, tmp_table)
     dt.update(set={"s.x": "s.x + 1"}, condition="id = 2")
-    rows = {r["id"]: (r["s"]["x"], r["s"]["y"]) for r in dt.toDF().collect()}
-    assert rows == {1: (10, "a"), 2: (21, "b")}
+    assert _struct_rows(dt) == {1: (10, "a"), 2: (21, "b"), 3: None}
+    dt.update(set={"s.x": "5"})
+    assert _struct_rows(dt) == {1: (5, "a"), 2: (5, "b"), 3: None}
 
 
 def test_merge_nested_and_backquoted_set(spark, tmp_table):
@@ -112,7 +136,8 @@ def test_merge_nested_and_backquoted_set(spark, tmp_table):
 
     df = spark.sql(
         "SELECT * FROM VALUES (1, named_struct('x', 10, 'y', 'a'), 5), "
-        "(2, named_struct('x', 20, 'y', 'b'), 6) AS t(id, s, v)")
+        "(2, named_struct('x', 20, 'y', 'b'), 6), "
+        "(4, CAST(NULL AS struct<x:int,y:string>), 8) AS t(id, s, v)")
     # nullable columns: the merge below inserts a row with a NULL struct
     from pyspark.sql import types as T
 
@@ -126,7 +151,7 @@ def test_merge_nested_and_backquoted_set(spark, tmp_table):
     df = spark.createDataFrame(df.collect(), relax(df.schema))
     write_delta(df, tmp_table)
     dt = DeltaTable.forPath(spark, tmp_table)
-    src = spark.sql("SELECT * FROM VALUES (2, 99), (3, 77) AS t(id, nv)")
+    src = spark.sql("SELECT * FROM VALUES (2, 99), (3, 77), (4, 55) AS t(id, nv)")
     (dt.merge(src, "t.id = s.id", target_alias="t", source_alias="s")
        .whenMatchedUpdate(set={"t.s.x": "s.nv", "`v`": "s.nv"})
        .whenNotMatchedInsert(values={"`id`": "s.id", "v": "s.nv"})
@@ -139,6 +164,63 @@ def test_merge_nested_and_backquoted_set(spark, tmp_table):
     assert rows[1] == (10, "a", 5)
     # inserted row: struct is null, v from source
     assert rows[3] == (None, None, 77)
+    # matched row with a NULL struct: the struct stays NULL
+    assert rows[4] == (None, None, 55)
+
+
+def test_two_level_nested_set_keeps_siblings(spark, tmp_table):
+    write_delta(spark.sql(
+        "SELECT 1 AS id, named_struct('a', named_struct('b', 1, 'c', 'k'), "
+        "'d', 2.5D) AS s"), tmp_table)
+    dt = DeltaTable.forPath(spark, tmp_table)
+
+    def s():
+        return dt.toDF().collect()[0]["s"].asDict(recursive=True)
+
+    dt.update(set={"s.a.b": "s.a.b + 41"})
+    assert s() == {"a": {"b": 42, "c": "k"}, "d": 2.5}
+    (dt.merge(spark.sql("SELECT 1 AS id, 7 AS nv"), "t.id = src.id",
+              target_alias="t", source_alias="src")
+       .whenMatchedUpdate(set={"T.S.A.B": "src.nv"}).execute())
+    assert s() == {"a": {"b": 7, "c": "k"}, "d": 2.5}
+
+
+@pytest.mark.parametrize("dv", ["false", "true"])
+def test_merge_nested_set_cdf_postimage(spark, tmp_table, dv):
+    write_delta(spark.sql(_NULL_STRUCT_ROWS), tmp_table, configuration={
+        "delta.enableChangeDataFeed": "true",
+        "delta.enableDeletionVectors": dv})
+    dt = DeltaTable.forPath(spark, tmp_table)
+    src = spark.sql("SELECT * FROM VALUES (2, 99), (3, 77) AS v(id, nv)")
+    (dt.merge(src, "t.id = s.id", target_alias="t", source_alias="s")
+       .whenMatchedUpdate(set={"t.s.x": "s.nv"}).execute())
+    got = sorted(((r["_change_type"], r["id"], r["s"] and tuple(r["s"]))
+                  for r in dt.table_changes(starting_version=1).collect()),
+                 key=str)
+    assert got == [("update_postimage", 2, (99, "b")),
+                   ("update_postimage", 3, None),
+                   ("update_preimage", 2, (20, "b")),
+                   ("update_preimage", 3, None)]
+
+
+@pytest.mark.parametrize("dv", ["false", "true"])
+def test_merge_nested_set_keeps_row_ids(spark, tmp_table, dv):
+    from delta_spark.reader import read_with_row_ids
+
+    write_delta(spark.sql(_NULL_STRUCT_ROWS), tmp_table, configuration={
+        "delta.enableRowTracking": "true",
+        "delta.enableDeletionVectors": dv})
+    log = DeltaLog.for_table(tmp_table)
+    before = {r["id"]: r["_row_id"]
+              for r in read_with_row_ids(spark, log.update()).collect()}
+    dt = DeltaTable.forPath(spark, tmp_table)
+    src = spark.sql("SELECT * FROM VALUES (1, 50), (3, 70) AS v(id, nv)")
+    (dt.merge(src, "t.id = s.id", target_alias="t", source_alias="s")
+       .whenMatchedUpdate(set={"t.s.x": "s.nv"}).execute())
+    rows = read_with_row_ids(spark, log.update()).collect()
+    assert {r["id"]: r["_row_id"] for r in rows} == before
+    assert {r["id"]: r["s"] and tuple(r["s"]) for r in rows} == {
+        1: (50, "a"), 2: (20, "b"), 3: None}
 
 
 def test_sql_update_nested_and_backquoted(spark, tmp_table):

@@ -714,6 +714,35 @@ def test_merge_cardinality_violation(spark, tmp_table):
     assert dt.toDF().count() == 3
 
 
+def test_merge_operation_metrics_exact(spark, tmp_table):
+    """Copy-on-write MERGE with update (a nested SET), delete and insert
+    clauses records exact row and file counts in commitInfo."""
+    write_delta(spark.sql(
+        "SELECT id, named_struct('x', id, 'y', 'a') AS s FROM range(1, 7)"
+    ).coalesce(1), tmp_table)
+    dt = DeltaTable.forPath(spark, tmp_table)
+    src = spark.sql("SELECT * FROM VALUES (1L, 'u', 50), (2L, 'd', 0), "
+                    "(9L, 'i', 90) AS v(id, op, nv)")
+    (dt.merge(src, "t.id = s.id", target_alias="t", source_alias="s")
+       .whenMatchedUpdate(condition="s.op = 'u'", set={"t.s.x": "s.nv"})
+       .whenMatchedDelete(condition="s.op = 'd'")
+       .whenNotMatchedInsert(values={"id": "s.id",
+                                     "s": "named_struct('x', s.nv, 'y', 'i')"})
+       .execute())
+    h = dt.history().collect()[0]
+    assert h["operation"] == "MERGE"
+    assert h["operationMetrics"] == {
+        "numTargetRowsUpdated": "1",
+        "numTargetRowsDeleted": "1",
+        "numTargetRowsInserted": "1",
+        "numTargetRowsCopied": "4",
+        "numTargetFilesAdded": "1",
+        "numTargetFilesRemoved": "1",
+    }
+    assert sorted((r["id"], r["s"]["x"]) for r in dt.toDF().collect()) == [
+        (1, 50), (3, 3), (4, 4), (5, 5), (6, 6), (9, 90)]
+
+
 def test_append_with_missing_nullable_columns(spark, tmp_table):
     """Appends may omit nullable table columns (ImplicitMetadataOperation:
     mergeSchemas(table, subset) == table schema, so the write proceeds and

@@ -402,10 +402,10 @@ def test_cdf_across_rename_blocked_additive_allowed(spark, tmp_table):
 
 
 def test_invariant_fastpath_escaping_and_update_selectexpr(spark, tmp_table):
-    """The one-string enforcement/projection fast paths (r10 driver-
-    overhead fix) must survive SQL-hostile text: constraint expressions
-    and column names carrying quotes/backslashes, and UPDATE's
-    selectExpr projection must match the Column chain byte-for-byte."""
+    """The one-string enforcement and UPDATE projection texts must
+    survive SQL-hostile text: constraint expressions and column names
+    carrying quotes/backslashes, and trailing -- comments in constraint,
+    SET and condition SQL."""
     from pyspark.sql import types as T
 
     schema = T.StructType([
@@ -431,3 +431,15 @@ def test_invariant_fastpath_escaping_and_update_selectexpr(spark, tmp_table):
         dt.update(condition="k = 3", set={"k": "CAST(NULL AS LONG)"})
     # state unchanged after both rejections
     assert {r["k"] for r in dt.toDF().collect()} == {1, 2, 3}
+    # a trailing -- comment in user SQL ends at its own line: it cannot
+    # swallow the text composed after it
+    dt.addCheckConstraint("pos", "k > 0 -- must be positive")
+    write_delta(spark.createDataFrame([(4, "d", 40)], schema), tmp_table,
+                mode="append")
+    with pytest.raises(Exception, match="CHECK constraint pos"):
+        write_delta(spark.createDataFrame([(-1, "e", 50)], schema), tmp_table,
+                    mode="append")
+    dt.update(condition="k = 4 -- the appended row",
+              set={"`path\\col`": "`path\\col` + 1 -- bump"})
+    got = {r["k"]: r["path\\col"] for r in dt.toDF().collect()}
+    assert got == {1: 10, 2: 120, 3: 30, 4: 41}
