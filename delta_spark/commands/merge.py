@@ -632,7 +632,7 @@ class MergeBuilder:
         # the observe node sees every joined row (copies included) even
         # though downstream only consumes the changed subset
         changed = joined.filter(
-            "__action <> 'copy' AND __action <> 'drop'").persist()
+            "__action <> 'copy' AND __action <> 'skip'").persist()
         from contextlib import ExitStack
 
         from delta_spark.util import scoped_dml_shuffle_width as _scoped_w
@@ -904,10 +904,8 @@ class MergeBuilder:
         return "".join(out)
 
     # rows to keep in phase-2 output: neither source-only rows with no
-    # applicable insert clause ('drop') nor deleted rows ('d...' tags;
-    # 'drop' also matches the LIKE — harmless, kept for text parity
-    # with the old Column filter ~isin('drop') & ~startswith('d'))
-    _KEEP_SQL = "NOT (__action IN ('drop')) AND NOT (__action LIKE 'd%')"
+    # applicable insert clause ('skip') nor deleted rows ('d...' tags)
+    _KEEP_SQL = "__action <> 'skip' AND NOT (__action LIKE 'd%')"
 
     def _action_sql(self) -> str:
         """__action as ONE SQL CASE text: the first matching clause of
@@ -925,7 +923,7 @@ class MergeBuilder:
             return f"(CASE {' '.join(whens)} ELSE '{default}' END)"
 
         m = cascade(self.matched, "m", "copy")
-        i = cascade(self.not_matched, "i", "drop")
+        i = cascade(self.not_matched, "i", "skip")
         s = cascade(self.not_matched_by_source, "s", "copy")
         return ("CASE WHEN (__t_exists IS NOT NULL "
                 "AND __s_exists IS NOT NULL) "
@@ -935,8 +933,8 @@ class MergeBuilder:
     def _metric_cols(self):
         """The 4 observe() aggregates as parsed SQL (was 4 × ~50 py4j
         round trips of F.sum(F.when(...)) construction). LIKE 'x%' ==
-        startswith for these wildcard-free tags; 'drop' counting under
-        'd%' matches the old startswith('d') behavior exactly."""
+        startswith for these wildcard-free tags; the no-op tags 'copy'
+        and 'skip' match none of the u/d/i prefixes."""
         return [
             F.expr("sum(CASE WHEN __action LIKE 'u%' THEN 1 ELSE 0 END)"
                    ).alias("updated"),

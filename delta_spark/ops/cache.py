@@ -1,140 +1,18 @@
-"""Bounded cache registry for the dedup/similarity kernels.
+"""The dedup/similarity operators hold no storage.
 
-Several pipeline operators persist an intermediate frame that feeds
-multiple plan branches — duplicate_spans' token-gram expansion,
-minhash_lsh_pairs'/jaccard_pairs' shingles, near_duplicates' membership
-window. Without the persist each branch would redo a corpus-sized
-shuffle (measured 3.3x on duplicate_spans); but the operator returns a
-LAZY DataFrame, so there is no point inside the operator at which the
-cache can be unpersisted, and relying on LRU eviction lets caches
-accumulate per call in long-running sessions (VERDICT r8 #3 /
-ADVICE r8).
+Their results are plain lazy DataFrames: an intermediate that feeds
+several branches of one query (a shingle or gram expansion, a banded
+frame, a membership window) is shared through Spark's exchange reuse,
+and nothing is persisted, so no call leaves session-lived state behind.
+Reuse across repeated identical calls is left to the caller.
 
-The registry bounds that: every persisted intermediate is registered
-under its operator name, and registering a NEW frame for an operator
-unpersists the previous one — a session holds at most one live cache
-per operator, however many times it calls them. The frames also ride on
-the result as ``result._ds_cached_deps`` so callers with a
-deterministic consumption point (a gate query collecting the result, a
-batch job writing it out) can free the storage immediately with
-``release(result)`` — or ``release_all()`` at a pipeline boundary.
-
-Unpersisting is always safe: a branch that re-reads an unpersisted
-frame recomputes it (slower, never wrong), so an early release — e.g.
-composing two calls of the same operator into one plan before
-materializing either — costs time only.
+``live_ops()`` stays as the observable form of that contract: the
+benchmark's traced run records it after every op.
 """
 
 from __future__ import annotations
 
-import threading
-import weakref
-
-from pyspark.sql import DataFrame
-
-# SparkSession (WEAKLY held) -> {op: live frame}. Keyed per-SESSION
-# (r9 ADVICE: a process-global name key made two sessions calling the
-# same operator evict each other's intermediate every call — never
-# wrong, but recompute thrash). Weak keying means a stopped-and-
-# collected session drops its whole entry instead of pinning the dead
-# session and its frames forever (same fix as util.py's saved-conf
-# map). Frames from a DataFrame whose session can't be read fall into
-# a per-process fallback dict that keeps the old one-per-op eviction.
-# Mutations happen under the lock (register/release can race across
-# threads); the lock is never held across semanticHash() — that is a
-# driver-side analysis call that can take seconds on wide plans.
-_LIVE: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-_LIVE_NOSESSION: dict[str, DataFrame] = {}
-_LOCK = threading.Lock()
-
-
-def _ops_map(df: DataFrame) -> dict[str, DataFrame]:
-    """The {op: frame} dict for df's session (created under _LOCK)."""
-    try:
-        spark = df.sparkSession
-    except Exception:
-        return _LIVE_NOSESSION
-    try:
-        m = _LIVE.get(spark)
-        if m is None:
-            m = _LIVE[spark] = {}
-        return m
-    except TypeError:  # session not weak-referenceable
-        return _LIVE_NOSESSION
-
-
-def _same_plan(a: DataFrame, b: DataFrame) -> bool:
-    try:
-        return a.semanticHash() == b.semanticHash()
-    except Exception:
-        return False
-
-
-def register(op: str, cached: DataFrame, result: DataFrame) -> DataFrame:
-    """Track `cached` (already persisted) as operator `op`'s one live
-    intermediate IN ITS SESSION, evicting the previous call's frame,
-    and attach it to `result` for release().
-
-    Spark's CacheManager keys entries by ANALYZED PLAN: a repeat call
-    over the same input produces a plan-identical frame that shares the
-    previous entry (so identical calls never accumulate storage), and
-    unpersisting the 'previous' frame would evict the entry the new
-    call just cached — the round-9 bench caught exactly that as a 3x
-    regression on exact_substr_spans. Eviction therefore only fires
-    when the plans differ (semanticHash, computed OUTSIDE the lock)."""
-    with _LOCK:
-        m = _ops_map(cached)
-        prev = m.get(op)
-    evict = prev is not None and not _same_plan(prev, cached)  # no lock
-    with _LOCK:
-        # re-read: a racing register may have swapped the entry while
-        # the hash was computing; only evict the frame we compared
-        if evict and m.get(op) is prev:
-            try:
-                prev.unpersist(blocking=False)
-            except Exception:
-                pass  # session already stopped — nothing to free
-        m[op] = cached
-    deps = list(getattr(result, "_ds_cached_deps", []))
-    result._ds_cached_deps = deps + [cached]
-    return result
-
-
-def release(result: DataFrame) -> None:
-    """Unpersist the cached intermediates behind an operator result.
-    Call after the result has been materialized (collected / written)."""
-    for df in getattr(result, "_ds_cached_deps", []):
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass
-        with _LOCK:
-            for m in list(_LIVE.values()) + [_LIVE_NOSESSION]:
-                for op, live in list(m.items()):
-                    if live is df:
-                        m.pop(op, None)
-    result._ds_cached_deps = []
-
-
-def release_all() -> None:
-    """Unpersist every live operator cache (pipeline boundary)."""
-    with _LOCK:
-        frames = [df for m in list(_LIVE.values()) + [_LIVE_NOSESSION]
-                  for df in m.values()]
-        for m in list(_LIVE.values()):
-            m.clear()
-        _LIVE_NOSESSION.clear()
-    for df in frames:
-        try:
-            df.unpersist(blocking=False)
-        except Exception:
-            pass
-
 
 def live_ops() -> list[str]:
-    """Operator names with a live cached intermediate (for tests;
-    session-agnostic view)."""
-    with _LOCK:
-        return sorted({op
-                       for m in list(_LIVE.values()) + [_LIVE_NOSESSION]
-                       for op in m})
+    """Operator names with a live cached intermediate: always empty."""
+    return []

@@ -46,7 +46,7 @@ def md5_hash64(col: Column, salt: str = "") -> Column:
 # cold in 55-62 s unspread vs 7-14 s spread to cluster width
 # (interleaved A/B; an 8 MB/slot gate produced width 3 and did NOT
 # rescue it), while a 584 KB corpus spread to all 32 cores paid ~0.5 s
-# of per-task scheduling on every cached read — 512 KB/slot gives that
+# of per-task scheduling on every read — 512 KB/slot gives that
 # tiny corpus width 2 (no tax) and anything past ~16 MB full width.
 EXPANSION_BYTES_PER_SLOT = 512 * 1024
 
@@ -72,7 +72,14 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     zip_with passes, simple concat lambdas) — ~2.5× faster than
     per-index `slice()` inside transform(), which copies a subarray per
     shingle. Trailing partial n-grams become NULL (zip padding) and are
-    filtered."""
+    filtered.
+
+    The null filter on (id, shingle) is stated explicitly: a caller
+    that joins on either column makes Spark infer the same `isnotnull`
+    filters on its join sides only, and branches that differ by an
+    inferred filter cannot share one exchange — with the filter written
+    here every branch over the expansion has the same subtree, so the
+    expansion runs once per query (exchange reuse)."""
     w = F.split(F.trim(F.col(text_col)), r"\s+")
     acc = w
     for j in range(1, n):
@@ -80,6 +87,8 @@ def shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
         acc = F.zip_with(acc, shifted, lambda a, b: F.concat(a, F.lit(" "), b))
     sh = F.filter(acc, lambda x: x.isNotNull())
     return (df.select(F.col(id_col), F.explode(sh).alias("shingle"))
+              .filter(F.col(id_col).isNotNull()
+                      & F.col("shingle").isNotNull())
               .distinct())
 
 
@@ -88,17 +97,13 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                   df_cut: int | None = None) -> DataFrame:
     """Exact n-gram Jaccard similarity pairs ≥ threshold.
     Returns (id_a, id_b, jaccard) with id_a < id_b. The shingle
-    expansion is persisted while the result is live (it feeds the
-    cardinality and both join sides) — registered with ops.cache so a
-    session never holds more than one call's worth; callers with a
-    deterministic consumption point free it with ops.cache.release()."""
-    from delta_spark.ops import cache as _cache
+    expansion feeds the cardinality and both join sides; they share
+    its exchange, so it runs once per query."""
     from delta_spark.ops.util import spread_to_width
 
-    # same cold-expansion spread as minhash_lsh_pairs (guide §2.6)
-    sh_cached = shingles(spread_to_width(df, EXPANSION_BYTES_PER_SLOT),
-                        text_col, id_col, n).cache()
-    sh = sh_cached
+    # same expansion spread as minhash_lsh_pairs (guide §2.6)
+    sh = shingles(spread_to_width(df, EXPANSION_BYTES_PER_SLOT),
+                  text_col, id_col, n)
     if df_cut is not None:
         freq = sh.groupBy("shingle").count().filter(F.col("count") <= df_cut)
         sh = sh.join(freq.select("shingle"), "shingle", "left_semi")
@@ -110,12 +115,11 @@ def jaccard_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
               .groupBy("id_a", "id_b").agg(F.count("*").alias("common")))
     ca = card.select(F.col(id_col).alias("id_a"), F.col("card").alias("card_a"))
     cb = card.select(F.col(id_col).alias("id_b"), F.col("card").alias("card_b"))
-    out = (common.join(ca, "id_a").join(cb, "id_b")
-           .withColumn("jaccard", F.round(
-               F.col("common") / (F.col("card_a") + F.col("card_b") - F.col("common")), 6))
-           .filter(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", "jaccard"))
-    return _cache.register("jaccard_pairs", sh_cached, out)
+    return (common.join(ca, "id_a").join(cb, "id_b")
+            .withColumn("jaccard", F.round(
+                F.col("common") / (F.col("card_a") + F.col("card_b") - F.col("common")), 6))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 def duplicate_spans(df: DataFrame, text_col: str = "text",
@@ -141,27 +145,17 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
     copy survives remediation, the retention policy of the paper.
 
     Scale shape: the gram expansion is JVM-side (zip_with + posexplode,
-    no Python) and computed ONCE (cached, like minhash_lsh_pairs'
-    shingles); the duplicate-gram filter joins on the gram hash
-    (shuffle ∝ corpus token count, partial-agg'd), and the island
-    merge windows by document id — per-partition state is bounded by
-    one document's duplicated-window count. No driver materialization
-    at any stage, so the plan holds at 100 TB with executors sized for
-    ordinary shuffle traffic.
-
-    Storage contract: the gram expansion (∝ corpus tokens) is persisted
-    while the result is live — it feeds both the duplicate-gram filter
-    and the join back — and registered with ops.cache, so repeated
-    calls in one session keep at most ONE expansion alive; callers with
-    a deterministic consumption point free it immediately with
-    ops.cache.release(result)."""
-    from delta_spark.ops import cache as _cache
+    no Python), evaluated once by each of its two readers (the
+    duplicate-gram count and the join back); the duplicate-gram filter
+    joins on the gram hash (shuffle ∝ corpus token count,
+    partial-agg'd), and the island merge windows by document id —
+    per-partition state is bounded by one document's duplicated-window
+    count. No driver materialization at any stage, so the plan holds
+    at 100 TB with executors sized for ordinary shuffle traffic."""
     from delta_spark.ops.util import spread_to_width
 
     # a one-split corpus runs the gram expansion as a single serial
-    # task (measured 2.8 s vs 1.4 s at sf0.1 cold); the spread sits
-    # INSIDE the cached subtree, so repeat calls are plan-identical
-    # cache hits and pay nothing (guide §2.6; warm A/B: no delta)
+    # task (measured 2.8 s vs 1.4 s at sf0.1 cold; guide §2.6)
     df = spread_to_width(df, EXPANSION_BYTES_PER_SLOT)
     w = F.split(F.trim(F.col(text_col)), r"\s+")
     # element j (0-based) of `acc` = the k-gram starting at token j+1;
@@ -175,8 +169,7 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
                        F.posexplode(acc).alias("pos0", "gram"))
                .filter(F.col("gram").isNotNull())
                .select("id", (F.col("pos0") + 1).alias("i"),
-                       F.md5("gram").alias("h"))
-               .cache())
+                       F.md5("gram").alias("h")))
     duph = (grams.groupBy("h")
             .agg(F.countDistinct("id").alias("nd"),
                  F.min(F.struct("id", "i")).alias("__keep"))
@@ -199,12 +192,11 @@ def duplicate_spans(df: DataFrame, text_col: str = "text",
                            F.when(prev.isNull() | (F.col("i") - prev > k),
                                   F.lit(1)).otherwise(F.lit(0)))
                .withColumn("island", F.sum("new_island").over(byid)))
-    out = (islands.groupBy("id", "island")
-           .agg(F.min("i").alias("span_start"),
-                (F.max("i") + k - 1).alias("span_end"),
-                F.count("*").alias("n_windows"))
-           .select("id", "span_start", "span_end", "n_windows"))
-    return _cache.register("duplicate_spans", grams, out)
+    return (islands.groupBy("id", "island")
+            .agg(F.min("i").alias("span_start"),
+                 (F.max("i") + k - 1).alias("span_end"),
+                 F.count("*").alias("n_windows"))
+            .select("id", "span_start", "span_end", "n_windows"))
 
 
 def remove_duplicate_spans(df: DataFrame, spans: DataFrame,
@@ -303,20 +295,19 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     then compute TRUE jaccard on the candidates only. Output matches
     jaccard_pairs wherever LSH recall reaches (r = k/bands rows/band →
     P(candidate) = 1-(1-s^r)^bands; the bound is exact only with
-    `independent=True` hashing — see minhash_signatures). The shingle
-    expansion persists while the result is live (signatures + exact
-    verify both read it) under the ops.cache registry — one live copy
-    per session, releasable via ops.cache.release(result)."""
-    from delta_spark.ops import cache as _cache
+    `independent=True` hashing — see minhash_signatures). The three
+    readers of the shingle expansion in the exact verification share
+    its exchange; the signatures expand on their own (their min
+    aggregates let Spark drop the shingle distinct, so that subtree
+    differs)."""
     from delta_spark.ops.util import spread_to_width
 
     assert k % bands == 0
     r = k // bands
-    # parallelize the cold shingle expansion of a one-split corpus;
-    # inside the cached subtree → warm calls unchanged (guide §2.6)
-    sh_cached = shingles(spread_to_width(df, EXPANSION_BYTES_PER_SLOT),
-                        text_col, id_col, n).cache()
-    sig = minhash_signatures(df, text_col, id_col, n, k, _shingles=sh_cached,
+    # parallelize the shingle expansion of a one-split corpus (guide §2.6)
+    sh = shingles(spread_to_width(df, EXPANSION_BYTES_PER_SLOT),
+                  text_col, id_col, n)
+    sig = minhash_signatures(df, text_col, id_col, n, k, _shingles=sh,
                              independent=independent)
     band_cols = []
     for b in range(bands):
@@ -325,16 +316,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
                                   F.md5(F.concat_ws("_", *parts)).alias("bucket")))
     banded = (sig.select(F.col(id_col), F.explode(F.array(*band_cols)).alias("bb"))
               .select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")))
-    # the banded frame feeds BOTH sides of the candidate self-join, and
-    # self-join sides are not syntactically identical subtrees (the
-    # id_a/id_b alias projections differ), so ReusedExchange does not
-    # dedupe them: without this persist the k min-aggregations of the
-    # signature groupBy (and the band-hash projection) ran once PER
-    # SIDE (guide §2.4/§5 — measured as two duplicated aggregate
-    # stage pairs in the dedup_minhash profile)
-    from pyspark import StorageLevel
-
-    banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
     l = banded.select(F.col(id_col).alias("id_a"), "band", "bucket")
     rgt = banded.select(F.col(id_col).alias("id_b"), "band", "bucket")
     cands = (l.join(rgt, ["band", "bucket"])
@@ -345,7 +326,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
     # — cost is O(candidate_pairs · shingles/doc), independent of the
     # corpus-wide shingle co-occurrence volume (unlike a full self-join,
     # which would re-do the exact-jaccard work LSH exists to avoid)
-    sh = sh_cached
     card = sh.groupBy(id_col).agg(F.count("*").alias("card"))
     a = sh.select(F.col(id_col).alias("id_a"), "shingle")
     b2 = sh.select(F.col(id_col).alias("id_b"), "shingle")
@@ -354,13 +334,11 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_
               .groupBy("id_a", "id_b").agg(F.count("*").alias("common")))
     ca = card.select(F.col(id_col).alias("id_a"), F.col("card").alias("card_a"))
     cb = card.select(F.col(id_col).alias("id_b"), F.col("card").alias("card_b"))
-    out = (common.join(ca, "id_a").join(cb, "id_b")
-           .withColumn("jaccard", F.round(
-               F.col("common") / (F.col("card_a") + F.col("card_b") - F.col("common")), 6))
-           .filter(F.col("jaccard") >= threshold)
-           .select("id_a", "id_b", "jaccard"))
-    out = _cache.register("minhash_lsh_pairs.banded", banded, out)
-    return _cache.register("minhash_lsh_pairs", sh_cached, out)
+    return (common.join(ca, "id_a").join(cb, "id_b")
+            .withColumn("jaccard", F.round(
+                F.col("common") / (F.col("card_a") + F.col("card_b") - F.col("common")), 6))
+            .filter(F.col("jaccard") >= threshold)
+            .select("id_a", "id_b", "jaccard"))
 
 
 def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",

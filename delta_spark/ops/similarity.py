@@ -309,29 +309,21 @@ def _spread_for_udf(corpus: DataFrame) -> DataFrame:
 def _bucket_pairs(assigned: DataFrame, id_col: str,
                   bucket_cols: list[str], chunk: int = 1024,
                   dedup: bool = True,
-                  keep: list[str] | None = None,
-                  cache_op: str = "_bucket_pairs") -> DataFrame:
+                  keep: list[str] | None = None) -> DataFrame:
     """Distinct candidate id pairs per bucket. Bucket keys must be
     non-null (band/bucket hashes and group representatives are).
 
     Shape: ONE shuffle partitions the assignment rows by bucket, a
     window count tags every row with its bucket size (one in-partition
-    sort, fully codegen-adjacent — no object aggregation), and the
-    tagged frame is PERSISTED (spillable; registered under `cache_op`
-    in the ops.cache registry) because it feeds several plan branches —
-    and the sides of a self-join are not syntactically identical
-    subtrees (the alias projections differ), so Spark's ReusedExchange
-    does NOT dedupe them: without the persist each branch re-ran the
-    banding/assignment UDF, its explode and the bucket shuffle
-    (measured 3x the work, 13.5 s → 3.4 s on the sf0.1 LSH candidate
-    stage — guide §2.4/§5, cache a reused frame whose recompute is
-    expensive). Callers pass a distinct `cache_op` per call site so two
-    candidate stages composed into one query (e.g. near_duplicates'
-    cluster mode) keep both frames live.
+    sort, fully codegen-adjacent — no object aggregation). The tagged
+    frame feeds several plan branches (both self-join sides and the
+    big-bucket path); every branch reads the same bucket exchange, which
+    Spark reuses, so the banding/assignment UDF and its explode run
+    once per query.
 
     Buckets of size ≤ `chunk` produce their pairs with a co-partitioned
     self-JOIN on the bucket key (id_a < id_b): both sides read the
-    cached tagged frame, the join is sort-merge over ≤`chunk`-row key
+    tagged frame, the join is sort-merge over ≤`chunk`-row key
     groups (bounded buffer), and everything stays in whole-stage
     codegen. The previous collect_list → posexplode/slice expansion
     paid the ObjectHashAggregate sort-fallback over EVERY banded row —
@@ -364,7 +356,6 @@ def _bucket_pairs(assigned: DataFrame, id_col: str,
     # so this adds no extra exchange
     from delta_spark.connect_compat import default_parallelism
 
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
     spark = assigned.sparkSession
@@ -372,8 +363,7 @@ def _bucket_pairs(assigned: DataFrame, id_col: str,
     bn = (assigned.repartition(width, *bucket_cols)
           .withColumn("__n", F.count(F.lit(1))
                       .over(Window.partitionBy(*bucket_cols)))
-          .filter(F.col("__n") > 1)
-          .persist(StorageLevel.MEMORY_AND_DISK))
+          .filter(F.col("__n") > 1))
 
     keep_cols = list(keep or [])
 
@@ -407,7 +397,7 @@ def _bucket_pairs(assigned: DataFrame, id_col: str,
                          F.greatest("__x", "__y").alias("id_b"))
 
     # small buckets: co-partitioned self-join on the bucket key, both
-    # sides from the cached tagged frame — id_a < id_b yields each
+    # sides from the tagged frame — id_a < id_b yields each
     # unordered pair exactly once (ids are unique within a bucket)
     sm = bn.filter(F.col("__n") <= chunk)
     small = (sm.select(*bucket_cols, F.col(id_col).alias("id_a"))
@@ -452,10 +442,7 @@ def _bucket_pairs(assigned: DataFrame, id_col: str,
     # dedup=False skips the distinct shuffle for callers whose ids
     # appear in exactly ONE bucket (pairs are then unique by
     # construction); banding callers need it to merge across bands
-    out = out.distinct() if dedup else out
-    from delta_spark.ops import cache as _opcache
-
-    return _opcache.register(cache_op, bn, out)
+    return out.distinct() if dedup else out
 
 
 def cosine_lsh_candidates(corpus: DataFrame, threshold: float = 0.95,
@@ -524,8 +511,7 @@ def cosine_lsh_candidates(corpus: DataFrame, threshold: float = 0.95,
               .select(F.col(id_col),
                       F.posexplode(band_buckets(F.col(vec_col)))
                       .alias("band", "bucket")))
-    return _bucket_pairs(banded, id_col, ["band", "bucket"],
-                         cache_op="cosine_lsh_candidates")
+    return _bucket_pairs(banded, id_col, ["band", "bucket"])
 
 
 def ivf_candidates(corpus: DataFrame, id_col: str = "vec_id",
@@ -563,8 +549,7 @@ def ivf_candidates(corpus: DataFrame, id_col: str = "vec_id",
 
     assigned = (_spread_for_udf(corpus).select(
         F.col(id_col), F.explode(probe_buckets(F.col(vec_col))).alias("bucket")))
-    return _bucket_pairs(assigned, id_col, ["bucket"],
-                         cache_op="ivf_candidates")
+    return _bucket_pairs(assigned, id_col, ["bucket"])
 
 
 def verify_pairs(corpus: DataFrame, pairs: DataFrame, threshold: float,
@@ -690,19 +675,17 @@ def near_duplicates(corpus: DataFrame, threshold: float = 0.95,
         return (out.withColumn("kind", F.lit("pair"))
                 if cluster_above is not None else out)
 
-    from pyspark import StorageLevel
     from pyspark.sql import Window
 
+    # the membership frame feeds ~6 plan branches (banding, two verify
+    # joins, two expansions, the member rows); they share the one
+    # vector-keyed window exchange through exchange reuse, except
+    # selfsim, whose sim >= threshold filter Spark pushes below the
+    # window (it reads only the partition key)
     w = Window.partitionBy(vec_col)
     mem = (corpus.select(id_col, vec_col)
            .withColumn("__rep", F.min(id_col).over(w))
            .withColumn("__gsz", F.count(F.lit(1)).over(w)))
-    # the membership frame feeds ~6 plan branches (param sizing,
-    # banding, two verify joins, two expansions) — without persist each
-    # branch would redo the vector-keyed window shuffle+sort. The
-    # ops.cache registry bounds accumulation to one live membership
-    # frame per session; ops.cache.release(result) frees it eagerly.
-    mem = mem.persist(StorageLevel.MEMORY_AND_DISK)
     reps = mem.filter(F.col(id_col) == F.col("__rep"))
     rep_vecs = reps.select(id_col, vec_col)
     ver = verify_pairs(rep_vecs, _cands_sized(rep_vecs, probe["nd"]),
@@ -750,15 +733,11 @@ def near_duplicates(corpus: DataFrame, threshold: float = 0.95,
           .join(selfsim, "__rep")          # linear; drops sub-tau groups
           .select("__rep", "sim", id_col))
     within = _bucket_pairs(gm, id_col, ["__rep", "sim"], dedup=False,
-                           keep=["sim"],
-                           cache_op="near_duplicates.within") \
+                           keep=["sim"]) \
         .select("id_a", "id_b", "sim")
 
-    from delta_spark.ops import cache as _opcache
-
     if cluster_above is None:
-        return _opcache.register("near_duplicates", mem,
-                                 cross.unionByName(within))
+        return cross.unionByName(within)
     # cluster-membership form for the big groups: one O(1) row per
     # non-representative member, sim = the group's self-cosine (the
     # exact value every collapsed pair would have carried), same ≥ τ
@@ -770,5 +749,4 @@ def near_duplicates(corpus: DataFrame, threshold: float = 0.95,
                        F.lit("member").alias("kind")))
     pairs = (cross.unionByName(within)
              .withColumn("kind", F.lit("pair")))
-    return _opcache.register("near_duplicates", mem,
-                             pairs.unionByName(members))
+    return pairs.unionByName(members)

@@ -21,7 +21,7 @@ def spread_to_width(df: DataFrame,
     = clamp(ceil(input_bytes / bytes_per_slot), 1, cluster width), so a
     tiny corpus is not fanned across every core — measured at sf0.1: a
     5k-doc corpus spread to 32 slots cost +0.5 s of downstream per-task
-    scheduling on every cached read, while 2-4 slots keep the cold
+    scheduling on every read, while 2-4 slots keep the cold
     parallelism win without the tax. Unknown plan size (no estimate)
     falls back to full cluster width — at worst the old behavior."""
     from delta_spark.connect_compat import default_parallelism, is_connect

@@ -341,13 +341,6 @@ def _arrow_view_names(col, tgt_type):
     return col.view(t)
 
 
-def _trace(msg):
-    import os as _os
-    t = _os.environ.get("DELTA_SPARK_STREAM_TRACE")
-    if t:
-        with open(t, "a") as f:
-            f.write(msg + "\n")
-
 class DeltaStreamReader(DataSourceStreamReader):
     def __init__(self, schema, options):
         self.path = options.get("path")
@@ -511,7 +504,6 @@ class DeltaStreamReader(DataSourceStreamReader):
         return _fs_data_path(self.path, p)
 
     def initialOffset(self) -> dict:
-        _trace("initialOffset")
         # only called for a brand-new query → a safe admission base
         self._pos = dict(self._initial)
         off = dict(self._initial)
@@ -721,7 +713,6 @@ class DeltaStreamReader(DataSourceStreamReader):
         partitions() first, which re-seeds the base), so seeding from
         the initial offset is safe and lets the cap govern the very
         first microbatch too — the reference's backlog-drain shape."""
-        _trace(f"latestOffset pos={self._pos}")
         latest = self.log.latest_version()
         if self.available_now:
             # AvailableNow contract: everything available AT QUERY
@@ -798,7 +789,6 @@ class DeltaStreamReader(DataSourceStreamReader):
         return _offset(*end)
 
     def partitions(self, start: dict, end: dict):
-        _trace(f"partitions {start} -> {end}")
         for off in (start, end):
             rid = off.get("reservoirId")
             if rid and self._table_id and rid != self._table_id:

@@ -743,6 +743,29 @@ def test_merge_operation_metrics_exact(spark, tmp_table):
         (1, 50), (3, 3), (4, 4), (5, 5), (6, 6), (9, 90)]
 
 
+@pytest.mark.parametrize("dv", ["false", "true"])
+def test_merge_uninserted_source_row_is_not_a_delete(spark, tmp_table, dv):
+    """A source-only row that no NOT MATCHED clause takes is neither
+    inserted nor deleted: it must not count in numTargetRowsDeleted
+    nor reach the change feed as a 'delete' row."""
+    write_delta(spark.createDataFrame([(1, 10), (2, 20)], "id long, v long"),
+                tmp_table, configuration={
+                    "delta.enableChangeDataFeed": "true",
+                    "delta.enableDeletionVectors": dv})
+    dt = DeltaTable.forPath(spark, tmp_table)
+    src = spark.createDataFrame([(1, 11), (3, 33)], "id long, v long")
+    (dt.merge(src, "t.id = s.id", target_alias="t", source_alias="s")
+       .whenMatchedDelete()
+       .whenNotMatchedInsertAll(condition="s.v > 100")
+       .execute())
+    m = dt.history().collect()[0]["operationMetrics"]
+    assert (m["numTargetRowsDeleted"], m["numTargetRowsInserted"]) == ("1", "0")
+    feed = dt.table_changes(starting_version=1).collect()
+    assert [(r["id"], r["v"], r["_change_type"]) for r in feed] == [
+        (1, 10, "delete")]
+    assert [tuple(r) for r in dt.toDF().collect()] == [(2, 20)]
+
+
 def test_append_with_missing_nullable_columns(spark, tmp_table):
     """Appends may omit nullable table columns (ImplicitMetadataOperation:
     mergeSchemas(table, subset) == table schema, so the write proceeds and

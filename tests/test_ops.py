@@ -868,47 +868,60 @@ def test_near_duplicates_cluster_above_edge_cases(spark):
         near_duplicates(df, method="lsh", cluster_above=0)
 
 
-def test_ops_cache_registry_bounds_live_caches(spark):
-    """VERDICT r8 #3 / ADVICE: the dedup/similarity kernels persist a
-    corpus-scale intermediate with no unpersist point (lazy results) —
-    the ops.cache registry caps a session at one live cache per
-    operator and release() frees them deterministically."""
-    from delta_spark.ops import cache as opcache
+def _dup_docs(spark):
+    rows = [(i, f"tok{i % 37} tok{(i * 7) % 23} common words here "
+                f"plus body {i % 11} tail tok{i % 5}") for i in range(200)]
+    return spark.createDataFrame(rows, "doc_id long, text string") \
+        .repartition(2)
+
+
+def _dup_vecs(spark):
+    import numpy as np
+
+    base = np.random.RandomState(3).randn(40, 8)
+    rows = [(i, [float(x) for x in base[i % 40]]) for i in range(60)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>") \
+        .repartition(2)
+
+
+def _final_plan(df) -> str:
+    """The physical plan a collect() of `df` actually ran (AQE's final
+    plan; reused exchanges appear as ReusedExchange leaves)."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().executedPlan().toString()
+
+
+def test_dedup_ops_leave_no_cached_data(spark):
+    """The dedup/similarity operators persist nothing: after collecting
+    each result the session's CacheManager holds no entry."""
     from delta_spark.ops.dedup import duplicate_spans
+    from delta_spark.ops.similarity import near_duplicates
 
-    opcache.release_all()
-    docs = spark.createDataFrame(
-        [(1, "a b c d e f g h i j"), (2, "a b c d e f g h i j"),
-         (3, "z y x w v u t s r q")],
-        "doc_id long, text string")
-    docs2 = spark.createDataFrame(
-        [(7, "p q r s t u v w x y"), (8, "p q r s t u v w x y")],
-        "doc_id long, text string")
-    s1 = duplicate_spans(docs, k=4)
-    dep1 = s1._ds_cached_deps[0]
-    s1.count()
-    assert dep1.storageLevel.useMemory          # live after first call
-    assert opcache.live_ops() == ["duplicate_spans"]
+    spark.catalog.clearCache()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    docs, vecs = _dup_docs(spark), _dup_vecs(spark)
+    for out in (jaccard_pairs(docs, threshold=0.3),
+                minhash_lsh_pairs(docs, threshold=0.3),
+                duplicate_spans(docs, k=3),
+                near_duplicates(vecs, threshold=0.9, method="lsh")):
+        assert out.collect()
+        assert cache_manager.isEmpty()
 
-    # an IDENTICAL repeat call shares the same CacheManager entry (keyed
-    # by analyzed plan) — re-registering must NOT evict it, or the new
-    # call's own cache dies with it (the r9 bench regression)
-    s1b = duplicate_spans(docs, k=4)
-    s1b.count()
-    assert dep1.storageLevel.useMemory
-    assert opcache.live_ops() == ["duplicate_spans"]
 
-    # a DIFFERENT-input call evicts the previous cache; one live entry
-    s2 = duplicate_spans(docs2, k=4)
-    s2.count()
-    assert not dep1.storageLevel.useMemory
-    assert opcache.live_ops() == ["duplicate_spans"]
+def test_dedup_ops_share_expansion_by_exchange_reuse(spark):
+    """Without a persist, an intermediate that feeds several branches is
+    computed once only if every branch has the same subtree, so that
+    Spark reuses its exchange: jaccard_pairs runs one shingle Generate
+    and near_duplicates(method="lsh") one banding UDF."""
+    import re
 
-    opcache.release(s2)
-    assert not s2._ds_cached_deps
-    assert opcache.live_ops() == []
-    # released result still recomputes correctly (one span per doc)
-    assert s2.count() == 2
+    from delta_spark.ops.similarity import near_duplicates
+
+    plan = _final_plan(jaccard_pairs(_dup_docs(spark), threshold=0.3))
+    assert len(re.findall(r"\bGenerate explode", plan)) == 1, plan
+    plan = _final_plan(near_duplicates(_dup_vecs(spark), threshold=0.9,
+                                       method="lsh"))
+    assert len(re.findall(r"\bArrowEvalPython\b", plan)) == 1, plan
 
 
 def test_near_duplicates_target_miss_knob(spark):

@@ -39,7 +39,6 @@ def test_spread_width_is_size_gated(spark, tmp_path):
 def test_dedup_ops_invariant_under_partitioning(spark, op):
     """One-split and many-split corpora produce identical results —
     the spread (and any width it picks) cannot change answers."""
-    from delta_spark.ops import cache as opcache
     from delta_spark.ops.dedup import (duplicate_spans, jaccard_pairs,
                                        minhash_lsh_pairs)
 
@@ -53,10 +52,7 @@ def test_dedup_ops_invariant_under_partitioning(spark, op):
         else:
             out = jaccard_pairs(df, threshold=0.3)
             key = ["id_a", "id_b", "jaccard"]
-        rows = sorted(tuple(r) for r in out.select(*key).collect())
-        opcache.release_all()
-        spark.catalog.clearCache()
-        return rows
+        return sorted(tuple(r) for r in out.select(*key).collect())
 
     narrow = run(_docs(spark, nparts=1))
     wide = run(_docs(spark, nparts=8))
