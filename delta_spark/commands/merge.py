@@ -26,7 +26,8 @@ Execution (Spark-first):
      ONLY the touched files' rows against the source, with a
      first-matching-clause CASE projection per output column; rows
      from untouched files are never read or written.
-Metrics are collected with df.observe() — zero extra passes.
+Row metrics: a copy-on-write merge collects them with df.observe() —
+zero extra passes; a DV merge aggregates its cached changed rows.
 """
 
 from __future__ import annotations
@@ -184,9 +185,9 @@ def _should_materialize_source(source: DataFrame) -> bool:
     return any(m in js for m in _NONDET_JSON_MARKERS)
 
 
-def _row_metrics(obs: Observation) -> dict[str, str]:
-    """operationMetrics row counts from the phase-2 observation."""
-    m = obs.get
+def _row_metrics(m: dict) -> dict[str, str]:
+    """operationMetrics row counts from the phase-2 `_metric_cols`
+    aggregates."""
     return {
         "numTargetRowsUpdated": str(m.get("updated") or 0),
         "numTargetRowsDeleted": str(m.get("deleted") or 0),
@@ -492,8 +493,8 @@ class MergeBuilder:
         # shuffle width ∝ bytes this command actually moves (guide
         # §2.2), session width as the cap — a small merge stops paying
         # core-count fan-out; None (no source size estimate) = no-op
-        from delta_spark.util import (plan_size_estimate,
-                                      scoped_dml_shuffle_width)
+        from delta_spark.connect_compat import plan_size_estimate
+        from delta_spark.util import scoped_dml_shuffle_width
 
         src_bytes = plan_size_estimate(source)
         cand_bytes = (sum(f.size or 0 for f in candidates) + src_bytes
@@ -590,7 +591,7 @@ class MergeBuilder:
             adds = write_table_files(resultw.drop("__action"),
                                      self._out_snapshot(snapshot))
         removes = [f.remove() for f in touched]
-        metrics = _row_metrics(obs)
+        metrics = _row_metrics(obs.get)
         metrics["numTargetFilesRemoved"] = str(len(removes))
         metrics["numTargetFilesAdded"] = str(len(adds))
         evo = [self._evolution_meta] if self._evolution_meta is not None else []
@@ -625,14 +626,10 @@ class MergeBuilder:
         src_df = source.withColumn("__s_exists", F.lit(True))
         joined = (touched_df.alias(self.tgt)
                   .join(src_df.alias(self.src), F.expr(self.condition), join_type))
-        obs = Observation("merge_metrics")
-        joined = (joined
-                  .withColumn("__action", F.expr(self._action_sql()))
-                  .observe(obs, *self._metric_cols()))
-        # the observe node sees every joined row (copies included) even
-        # though downstream only consumes the changed subset
-        changed = joined.filter(
-            "__action <> 'copy' AND __action <> 'skip'").persist()
+        changed = (joined
+                   .withColumn("__action", F.expr(self._action_sql()))
+                   .filter("__action <> 'copy' AND __action <> 'skip'")
+                   .persist())
         from contextlib import ExitStack
 
         from delta_spark.util import scoped_dml_shuffle_width as _scoped_w
@@ -694,6 +691,12 @@ class MergeBuilder:
                     insert_df=resultw)
             adds = write_table_files(resultw.drop("__action"),
                                      self._out_snapshot(snapshot))
+            # row counts come from the cached `changed` in one job of
+            # their own: an observe() under the persist would be filled
+            # by whichever of the two concurrent jobs ended first, each
+            # having computed only some of the partitions. Copies are
+            # not in `changed`: under a DV no row moves.
+            counts = changed.agg(*self._metric_cols()).first().asDict()
         except BaseException as primary:
             # the DV thread's own error would otherwise be lost
             if dv_thread is not None:
@@ -709,7 +712,7 @@ class MergeBuilder:
         if "err" in dv_result:
             raise dv_result["err"]
         dv_adds, removes, _ = dv_result["val"]
-        metrics = _row_metrics(obs)
+        metrics = _row_metrics(counts)
         metrics["numTargetFilesRemoved"] = str(len(removes))
         metrics["numTargetFilesAdded"] = str(len(adds))
         metrics["numDeletionVectorsAdded"] = str(len(dv_adds))
@@ -849,8 +852,8 @@ class MergeBuilder:
         for p in parts[1:]:
             out = out.unionByName(p)
         out = self._finalize_inserts(out, snapshot)
-        from delta_spark.util import (plan_size_estimate,
-                                      scoped_dml_shuffle_width)
+        from delta_spark.connect_compat import plan_size_estimate
+        from delta_spark.util import scoped_dml_shuffle_width
 
         src_bytes = plan_size_estimate(source)
         in_bytes = (sum(f.size or 0 for f in candidates) + src_bytes

@@ -11,16 +11,17 @@ Add(dataChange=false) + Remove. Readers are unaffected (snapshot
 isolation; conflict-free with appends since dataChange=false commits
 take SnapshotIsolation).
 
-Z-ORDER (scale design): per clustering column, compute ~`num_ranges`
-range boundaries with a distributed sampled quantile pass
-(approxQuantile — the PySpark analogue of RangePartitionId's sampling
-partitioner), map each row to its range id with a codegen'd
-aggregate-over-boundary-array expression (no UDF, no global window —
-a global ntile() would serialize through one partition at 100 TB),
-interleave the range-id bits into a single long z-key with shift/or
-arithmetic, then repartitionByRange(z-key) + sortWithinPartitions so
-each output file covers a tight z-curve segment → tight min/max stats
-→ effective data skipping on all clustered dimensions.
+Z-ORDER: one narrow driver-side sample (≤1M rows of the clustering
+columns, collected through Arrow) yields both the per-column range
+bounds and the z-key file bounds. Each row's range ids come from a
+WHEN chain (≤16 bounds) or an Arrow-batched `searchsorted`, their bits
+interleave into one long z-key with shift/or arithmetic, and
+`repartitionById` on the z-key's file index + `sortWithinPartitions`
+sends each row straight to its output file — one full-input execution,
+no range-partitioner sampling job, no global window (a global ntile()
+would serialize through one partition at 100 TB). Each file covers a
+tight z-curve segment → tight min/max stats → effective data skipping
+on all clustered dimensions.
 """
 
 from __future__ import annotations
@@ -237,10 +238,6 @@ def _compact(spark: SparkSession, log: DeltaLog, partition_filter: Optional[str]
     return {"version": v, **metrics}
 
 
-def range_id_column(col: str, boundaries: list) -> Column:
-    return range_id_column_from(F.col(col), boundaries)
-
-
 def _searchsorted_rid(value: Column, boundaries: list) -> Column:
     """Range-id via an Arrow-batched pandas UDF doing a vectorized
     binary search (np.searchsorted) — the PySpark analogue of the
@@ -306,102 +303,33 @@ def _np_zkeys(V, all_bounds, bits: int):
     return z
 
 
-_PARTITION_REPS: dict[int, Optional[list[int]]] = {}
+def _zorder_key(df: DataFrame, cols: list[str], num_ranges: int,
+                n_out: int, rows: int):
+    """Attach a __zkey column and derive the output-file bounds that
+    route it, all from ONE driver-side sample of the clustering columns.
 
+    The narrow numeric projections of a ≤1M-row uniform sample (the
+    fraction follows from ``rows``) are collected through Arrow. Per
+    column, ``num_ranges`` quantiles of that sample are the range
+    bounds; the sample's own z-keys (``_np_zkeys``, the numpy replica of
+    the row expressions) then give the ``n_out - 1`` z-key quantiles
+    that split the table into equally sized output files. Quantile
+    jitter at 1M samples moves a border by O(1/√1M), far below file
+    granularity. Returns ``(frame, z-key column, file bounds)``; the
+    bounds list is empty when ``n_out`` is 1 or the input is empty.
 
-def _reps_route_correctly(spark, reps: list[int], n: int) -> bool:
-    """True iff `repartition(n, col)` actually sends a row carrying
-    reps[p] to partition p, verified end-to-end with
-    spark_partition_id() on a tiny n-row probe — the contract the
-    routed ZORDER path depends on, asserted against the engine instead
-    of assumed from its current implementation."""
-    probe = spark.createDataFrame(
-        [(int(v), p) for p, v in enumerate(reps)], "v long, p int")
-    bad = (probe.repartition(n, F.col("v"))
-           .select(F.spark_partition_id().alias("actual"), "p")
-           .filter("actual <> p").count())
-    return bad == 0
-
-
-def _partition_reps(spark, n: int) -> Optional[list[int]]:
-    """For each partition index p < n, a BIGINT v with
-    pmod(hash(v), n) == p — i.e. `repartition(n, col)` routes rows
-    carrying v exactly to partition p (DataFrame hash partitioning is
-    pmod(murmur3(cols), n), the same function F.hash exposes). Lets a
-    precomputed range id act as an EXACT range partitioner without
-    repartitionByRange's extra sampling pass over the full input. The
-    mapping is data-independent, so it is memoized per n for the
-    process lifetime. The found set is then VALIDATED against a real
-    `repartition(n, col)` probe (spark_partition_id() == p for all n
-    rows); on mismatch — a Spark whose DataFrame hash partitioning is
-    not pmod(F.hash, n) — this returns None (memoized) and the caller
-    keeps the repartitionByRange path, trading the extra sampling pass
-    for guaranteed layout rather than silently coarsening clustering."""
-    if n in _PARTITION_REPS:
-        return _PARTITION_REPS[n]
-    found: dict[int, int] = {}
-    start, batch = 0, max(64, 8 * n)
-    while len(found) < n:
-        rows = (spark.range(start, start + batch)
-                .select("id", F.pmod(F.hash(F.col("id")), F.lit(n))
-                        .alias("p")).collect())
-        for r in rows:
-            found.setdefault(r["p"], r["id"])
-        start += batch
-    reps: Optional[list[int]] = [found[p] for p in range(n)]
-    if not _reps_route_correctly(spark, reps, n):
-        reps = None
-    _PARTITION_REPS[n] = reps
-    return reps
-
-
-def zorder_key(df: DataFrame, cols: list[str], num_ranges: int,
-               n_out: Optional[int] = None,
-               approx_rows: Optional[int] = None) -> tuple[DataFrame, str]:
-    zdf, zcol, _ = _zorder_key_routed(df, cols, num_ranges, n_out,
-                                      approx_rows)
-    return zdf, zcol
-
-
-def _zorder_key_routed(df: DataFrame, cols: list[str], num_ranges: int,
-                       n_out: Optional[int] = None,
-                       approx_rows: Optional[int] = None):
-    """Attach a __zkey column; boundaries from ONE sampled quantile
-    pass over every clustering column at once.
-
-    When `approx_rows` is known (file stats), the quantile pass is a
-    DRIVER-side sample: the narrow numeric projections of a ≤1M-row
-    uniform sample are collected (Arrow), per-column range boundaries
-    AND the z-key FILE boundaries both come from that one sample, and
-    the third return value is the float64 file-boundary array — the
-    caller routes rows to output files with one searchsorted instead
-    of repartitionByRange, whose RangePartitioner pays an EXTRA
-    sampling execution of the full input including the z-key
-    computation (guide §2.4 remove shuffd passes: ZORDER drops from 3
-    full-input executions to 1 full + 1 narrow sample scan). Quantile
-    jitter at 1M samples moves range borders by O(1/√1M), far below
-    file granularity. Without `approx_rows` the previous distributed
-    approxQuantile path stands (no sample fraction can be derived
-    without a row estimate) and the third return value is None.
-
-    Two scale knobs, both rationalized by the fact that clustering
-    quality is FILE-granular (min/max skipping reads whole files):
-
-    - ``n_out`` caps the effective range count at 16 ranges per output
-      file (floor 64): finer ids than that only reorder rows inside a
-      file, which parquet row-group stats barely notice, while the
-      boundary list and the per-row id computation scale with it. Small
-      jobs thereby stay on the codegen'd WHEN-chain id path — no Python
-      in the row pipeline at all.
-    - ``approx_rows`` (when known from file stats) caps the quantile
-      scan at a ~2M-row sample; quantile jitter moves range borders by
-      O(1/sqrt(sample)) which is far below file granularity.
+    ``num_ranges`` is capped at 16 ranges per output file (floor 64):
+    clustering quality is FILE-granular (min/max skipping reads whole
+    files), so finer ids only reorder rows inside a file, while the
+    bound lists and the per-row id computation grow with them. Small
+    jobs thereby stay on the codegen'd WHEN-chain id path.
 
     Range ids are materialized as real columns BEFORE bit interleaving:
     interleave_bits references each id `bits` times, and inlining the
-    boundary-fold expression there would blow up codegen by bits×."""
-    if n_out is not None:
-        num_ranges = min(num_ranges, max(64, 16 * n_out))
+    id expression there would blow up codegen by bits×."""
+    import numpy as np
+
+    num_ranges = min(num_ranges, max(64, 16 * n_out))
     bits = max(1, math.ceil(math.log2(num_ranges)))
     probs = [i / num_ranges for i in range(1, num_ranges)]
 
@@ -420,28 +348,21 @@ def _zorder_key_routed(df: DataFrame, cols: list[str], num_ranges: int,
 
     nums = [_numeric(c) for c in cols]
     sample_src = df.select(*[n.alias(f"__v_{i}") for i, n in enumerate(nums)])
-    file_bounds = None
-    if approx_rows:
-        import numpy as np
-
-        if approx_rows > _SAMPLE_CAP_ROWS:
-            sample_src = sample_src.sample(
-                False, _SAMPLE_CAP_ROWS / approx_rows, seed=42)
-        V = sample_src.toPandas().to_numpy(dtype="float64", na_value=float("nan"))
-        all_bounds = []
-        for i in range(len(cols)):
-            col_v = V[:, i] if len(V) else np.array([], dtype="float64")
-            valid = col_v[~np.isnan(col_v)]
-            all_bounds.append(
-                [float(x) for x in np.quantile(valid, probs)]
-                if len(valid) and probs else [])
-        if n_out is not None and n_out > 1 and len(V):
-            zs = _np_zkeys(V, all_bounds, bits)
-            file_bounds = np.quantile(
-                zs, [i / n_out for i in range(1, n_out)]).astype("float64")
-    else:
-        all_bounds = sample_src.approxQuantile(
-            [f"__v_{i}" for i in range(len(cols))], probs, 0.01)
+    if rows > _SAMPLE_CAP_ROWS:
+        sample_src = sample_src.sample(False, _SAMPLE_CAP_ROWS / rows, seed=42)
+    V = sample_src.toPandas().to_numpy(dtype="float64", na_value=float("nan"))
+    all_bounds = []
+    for i in range(len(cols)):
+        col_v = V[:, i] if len(V) else np.array([], dtype="float64")
+        valid = col_v[~np.isnan(col_v)]
+        all_bounds.append(
+            [float(x) for x in np.quantile(valid, probs)]
+            if len(valid) and probs else [])
+    file_bounds = []
+    if n_out > 1 and len(V):
+        zs = _np_zkeys(V, all_bounds, bits)
+        file_bounds = [float(x) for x in np.quantile(
+            zs, [i / n_out for i in range(1, n_out)])]
     out = df
     rid_cols = []
     for idx, (num, bounds) in enumerate(zip(nums, all_bounds)):
@@ -501,46 +422,16 @@ def _zorder(spark: SparkSession, log: DeltaLog, cols: list[str],
         total = sum(f.size for f in files)
         n_out = max(1, math.ceil(total / max_file_size))
         df = _rewrite_input(spark, snapshot, files)
-        approx_rows = sum(_file_rows(f) for f in files) or None
-        zdf, zcol, file_bounds = _zorder_key_routed(
-            df, cols, num_ranges, n_out=n_out, approx_rows=approx_rows)
-        reps_list = (_partition_reps(spark, n_out)
-                     if n_out > 1 and file_bounds is not None else None)
-        if n_out == 1:
-            # one output file: range partitioning is vacuous, and
-            # repartitionByRange would pay an extra full scan (its
-            # RangePartitioner sampling pass) just to learn that
-            clustered = (zdf.repartition(1)
-                         .sortWithinPartitions(zcol).drop(zcol))
-        elif reps_list is not None:
-            # route each row to its output range with one searchsorted
-            # over the sample-derived z-key file boundaries, carried by
-            # a representative value that hash-partitions to exactly
-            # that partition index (probe-VERIFIED per n_out in
-            # _partition_reps) — the z-ordered layout of
-            # repartitionByRange without its extra sampling execution
-            # of the full input (the z-key UDF ran TWICE before this)
-            import numpy as np
-            import pandas as pd
-            from pyspark.sql.functions import pandas_udf
-
-            reps = np.array(reps_list, dtype="int64")
-            fb = file_bounds
-
-            def _route(s):
-                z = s.to_numpy(dtype="float64", na_value=float("nan"))
-                f = np.searchsorted(fb, z, side="right")
-                return pd.Series(reps[f])
-
-            route = pandas_udf(_route, "long")
-            clustered = (zdf.withColumn("__zroute", route(F.col(zcol)))
-                         .repartition(n_out, F.col("__zroute"))
-                         .sortWithinPartitions(zcol)
-                         .drop(zcol, "__zroute"))
-        else:
-            clustered = (zdf.repartitionByRange(n_out, F.col(zcol))
-                         .sortWithinPartitions(zcol)
-                         .drop(zcol))
+        counts = [_file_rows(f) for f in files]
+        rows = sum(counts) if all(counts) else df.count()
+        zdf, zcol, file_bounds = _zorder_key(df, cols, num_ranges, n_out, rows)
+        # the file index of a row is the number of file bounds at or
+        # below its z-key; repartitionById sends it straight to that
+        # output partition (a REPARTITION_BY_NUM exchange, which AQE
+        # never coalesces), so partition p is the p-th z-curve segment
+        clustered = (zdf.repartitionById(
+            n_out, range_id_column_from(F.col(zcol), file_bounds))
+            .sortWithinPartitions(zcol).drop(zcol))
         new = write_table_files(clustered, snapshot, data_change=False)
         if clustering:
             cube = str(_uuid.uuid4())

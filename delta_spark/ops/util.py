@@ -34,7 +34,7 @@ def spread_to_width(df: DataFrame,
     except Exception:
         return df
     if bytes_per_slot:
-        from delta_spark.util import plan_size_estimate
+        from delta_spark.connect_compat import plan_size_estimate
 
         est = plan_size_estimate(df)
         if est is not None:

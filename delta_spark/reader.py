@@ -442,12 +442,6 @@ def read_snapshot(
     return df
 
 
-def with_file_name(df: DataFrame) -> DataFrame:
-    """Tag rows with their source file (MERGE/DML touched-file
-    discovery uses input_file_name(), ClassicMergeExecutor.scala:72)."""
-    return df.withColumn("__delta_file", F.input_file_name())
-
-
 def _file_lit_map(snapshot, files, value_of):
     """file-key → literal long map (bounded by the batch's file count —
     rewrite batches and scans both pass pruned sets)."""

@@ -134,14 +134,6 @@ class Snapshot:
                     self.domain_metadata[a.domain] = a
             # cdc / commitInfo don't affect table state
 
-    def expire_tombstones(self, min_retention_ts: int) -> None:
-        """Drop tombstones older than the retention watermark (replay
-        keeps them only until minFileRetentionTimestamp)."""
-        self.tombstones = {
-            p: r for p, r in self.tombstones.items()
-            if (r.deletionTimestamp or 0) >= min_retention_ts
-        }
-
     # ------------------------------------------------------ accessors ----
 
     @property

@@ -137,23 +137,6 @@ def current_time_millis() -> int:
     return int(time.time() * 1000)
 
 
-def sql_literal(value: Any) -> str:
-    """Render a Python value as a Spark SQL literal (for building
-    predicate strings, e.g. metadata-only DELETE of partitions)."""
-    if value is None:
-        return "NULL"
-    if isinstance(value, bool):
-        return "true" if value else "false"
-    if isinstance(value, (int, float, decimal.Decimal)):
-        return str(value)
-    if isinstance(value, _dt.datetime):
-        return "TIMESTAMP '%s'" % value.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(value, _dt.date):
-        return "DATE '%s'" % value.isoformat()
-    s = str(value).replace("'", "''")
-    return f"'{s}'"
-
-
 # ------------------------------------------------------- log paths ----
 # PROTOCOL.md: a file action's `path` is a RELATIVE path encoded per
 # RFC 2396 (or an absolute URI). The safe set below matches what
@@ -330,10 +313,7 @@ def restore_field_id_read_confs(spark) -> None:
 # 64 MB target, while a ~2 MB sf0.1 merge ran best at width 2 (1.15 s
 # min) vs full 32-wide fan-out (1.27 s) — both land on ~2 MB of
 # compressed input per task for the CPU-bound join+rewrite.
-# Overridable per deployment.
-DML_TARGET_PARTITION_BYTES_CONF = \
-    "delta_spark.dml.targetShufflePartitionBytes"
-_DML_TARGET_PARTITION_BYTES_DEFAULT = 2 * 1024 * 1024
+_DML_TARGET_PARTITION_BYTES = 2 * 1024 * 1024
 
 
 import contextlib as _contextlib
@@ -355,16 +335,10 @@ def scoped_dml_shuffle_width(spark, input_bytes: Optional[int]):
     n = None
     saved = None
     if input_bytes is not None:
-        try:
-            target = int(
-                spark.conf.get(DML_TARGET_PARTITION_BYTES_CONF, None)
-                or _DML_TARGET_PARTITION_BYTES_DEFAULT)
-            cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
-            want = max(1, math.ceil(int(input_bytes) / max(1, target)))
-            if want < cur:
-                n, saved = want, cur
-        except Exception:
-            n = None
+        cur = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        want = max(1, math.ceil(int(input_bytes) / _DML_TARGET_PARTITION_BYTES))
+        if want < cur:
+            n, saved = want, cur
     if n is None:
         yield
         return
@@ -376,11 +350,3 @@ def scoped_dml_shuffle_width(spark, input_bytes: Optional[int]):
             spark.conf.set("spark.sql.shuffle.partitions", str(saved))
         except Exception:
             pass
-
-
-def plan_size_estimate(df) -> Optional[int]:
-    """Catalyst's optimized-plan sizeInBytes estimate for a DataFrame,
-    or None when unavailable. Routed through connect_compat — the
-    probe reads the JVM query execution, a classic-only seam."""
-    from delta_spark.connect_compat import plan_size_estimate as _pse
-    return _pse(df)

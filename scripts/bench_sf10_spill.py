@@ -112,7 +112,7 @@ def main() -> None:
             write_delta(df, os.path.join(base, t))
     run("load_delta", load)
 
-    # ---- zorder: the global-sort family (repartitionByRange + sort) ---
+    # ---- zorder: the clustering rewrite (repartitionById + sort) -----
     def zorder():
         tbl("lineitem").optimize().executeZOrderBy(
             "l_orderkey", "l_partkey", max_file_size=64 * 1024 * 1024)

@@ -743,6 +743,38 @@ def test_merge_operation_metrics_exact(spark, tmp_table):
         (1, 50), (3, 3), (4, 4), (5, 5), (6, 6), (9, 90)]
 
 
+def test_merge_operation_metrics_exact_dv(spark, tmp_table):
+    """DV MERGE over a 4-file target with a source spanning 2 files
+    records exact row counts. The DV bitmap job and the new-file write
+    run concurrently over the cached changed rows, so neither one sees
+    them all; the counts come from one aggregate over that cache."""
+    write_delta(spark.range(1, 41).selectExpr("id", "id * 10 AS v")
+                .repartitionByRange(4, "id"), tmp_table,
+                configuration={"delta.enableDeletionVectors": "true"})
+    dt = DeltaTable.forPath(spark, tmp_table)
+    assert len(DeltaLog.for_table(tmp_table).update().all_files) == 4
+    # ids 1-10 and 11-20 live in two different files
+    src = spark.sql("SELECT * FROM VALUES (2L, 'u'), (3L, 'u'), (12L, 'd'), "
+                    "(13L, 'd'), (14L, 'd'), (99L, 'i') AS v(id, op)")
+    (dt.merge(src, "t.id = s.id", target_alias="t", source_alias="s")
+       .whenMatchedUpdate(condition="s.op = 'u'", set={"v": "-t.v"})
+       .whenMatchedDelete(condition="s.op = 'd'")
+       .whenNotMatchedInsert(values={"id": "s.id", "v": "0"})
+       .execute())
+    assert dt.history().collect()[0]["operationMetrics"] == {
+        "numTargetRowsUpdated": "2",
+        "numTargetRowsDeleted": "3",
+        "numTargetRowsInserted": "1",
+        # unchanged rows of the two touched files stay in place
+        "numTargetRowsCopied": "0",
+        "numTargetFilesAdded": "3",
+        "numTargetFilesRemoved": "2",
+        "numDeletionVectorsAdded": "2",
+    }
+    assert sorted(r["id"] for r in dt.toDF().collect()) == sorted(
+        set(range(1, 41)) - {12, 13, 14} | {99})
+
+
 @pytest.mark.parametrize("dv", ["false", "true"])
 def test_merge_uninserted_source_row_is_not_a_delete(spark, tmp_table, dv):
     """A source-only row that no NOT MATCHED clause takes is neither
