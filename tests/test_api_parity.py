@@ -15,10 +15,22 @@ from __future__ import annotations
 
 import ast
 import inspect
+import os
 
 import pytest
 
 REF_TABLES = "/root/reference/python/delta/tables.py"
+REF_CONNECT_TABLES = "/root/reference/python/delta/connect/tables.py"
+
+# The reference surfaces are read from a reference checkout. Without
+# one, the tests that compare against it skip (they are not passed);
+# a reference file that is present but unparsable still fails loudly.
+needs_ref = pytest.mark.skipif(
+    not os.path.isfile(REF_TABLES),
+    reason=f"reference source {REF_TABLES} absent")
+needs_ref_connect = pytest.mark.skipif(
+    not os.path.isfile(REF_CONNECT_TABLES),
+    reason=f"reference source {REF_CONNECT_TABLES} absent")
 
 # classes the reference exports from delta.tables
 REF_CLASSES = ["DeltaTable", "DeltaMergeBuilder", "DeltaTableBuilder",
@@ -115,14 +127,16 @@ def _our_class(name):
     return None
 
 
-REF = _ref_methods()
+REF = _ref_methods() if os.path.isfile(REF_TABLES) else {}
 
 
+@needs_ref
 def test_reference_surface_nonempty():
     # guards the parser itself: the reference file has a known-size API
     assert len(REF) >= 47, sorted(REF)
 
 
+@needs_ref
 @pytest.mark.parametrize("key", sorted(REF))
 def test_api_signature_parity(key):
     cls_name, meth_name = key.split(".")
@@ -175,6 +189,7 @@ def test_api_signature_parity(key):
          f"ours {positional}")
 
 
+@needs_ref
 @pytest.mark.parametrize("key", sorted(REF))
 def test_api_default_value_parity(key):
     """Shared parameters must carry the SAME default value as the
@@ -253,8 +268,8 @@ def test_delta_package_shim_end_to_end(spark, tmp_path):
 # this engine serves both kinds with one class, so the connect file's
 # API must be signature-compatible with ours too (VERDICT r9 #6).
 # ---------------------------------------------------------------------------
-REF_CONNECT_TABLES = "/root/reference/python/delta/connect/tables.py"
-REF_CONNECT = _ref_methods(REF_CONNECT_TABLES)
+REF_CONNECT = (_ref_methods(REF_CONNECT_TABLES)
+               if os.path.isfile(REF_CONNECT_TABLES) else {})
 
 # connect-file parameters we accept under a different contract
 CONNECT_PARAM_DEVIATIONS = {
@@ -263,10 +278,12 @@ CONNECT_PARAM_DEVIATIONS = {
 }
 
 
+@needs_ref_connect
 def test_connect_reference_surface_nonempty():
     assert len(REF_CONNECT) >= 35, sorted(REF_CONNECT)
 
 
+@needs_ref_connect
 @pytest.mark.parametrize("key", sorted(REF_CONNECT))
 def test_connect_api_signature_parity(key):
     """Every public method of the reference's CONNECT client exists
