@@ -603,34 +603,6 @@ def window_file_actions(log, start: int,
 # read materializes per-file state on the driver — only O(#leaves)
 # pointer rows and the metadata-class actions pass through it.
 
-def _add_struct_type():
-    """Spark struct for from_json over ``delta_add_json`` — the same
-    field set state_df exposes (AddFile is lossless through it)."""
-    from pyspark.sql import types as T
-
-    dv_t = T.StructType([
-        T.StructField("storageType", T.StringType()),
-        T.StructField("pathOrInlineDv", T.StringType()),
-        T.StructField("offset", T.LongType()),
-        T.StructField("sizeInBytes", T.LongType()),
-        T.StructField("cardinality", T.LongType()),
-    ])
-    return T.StructType([
-        T.StructField("path", T.StringType()),
-        T.StructField("partitionValues",
-                      T.MapType(T.StringType(), T.StringType())),
-        T.StructField("size", T.LongType()),
-        T.StructField("modificationTime", T.LongType()),
-        T.StructField("dataChange", T.BooleanType()),
-        T.StructField("stats", T.StringType()),
-        T.StructField("deletionVector", dv_t),
-        T.StructField("tags", T.MapType(T.StringType(), T.StringType())),
-        T.StructField("baseRowId", T.LongType()),
-        T.StructField("defaultRowCommitVersion", T.LongType()),
-        T.StructField("clusteringProvider", T.StringType()),
-    ])
-
-
 def tree_files_df(log, spark, ckpt: dict, stats_struct=None):
     """Distributed tree read — the executor-side twin of ``load_state``:
     the live DATA entries of the manifest tree as a DataFrame shaped
@@ -645,6 +617,8 @@ def tree_files_df(log, spark, ckpt: dict, stats_struct=None):
     import pandas as pd  # noqa: F401  (worker-side import sanity)
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
+
+    from delta_spark.log import checkpoint_spark_schema
 
     cp = AMTCheckpoint(ckpt)
     table_path = os.path.abspath(log.table_path)
@@ -744,7 +718,9 @@ def tree_files_df(log, spark, ckpt: dict, stats_struct=None):
         for p in parts[1:]:
             src = src.unionByName(p)
 
-    a = F.from_json("delta_add_json", _add_struct_type())
+    # AddFile is lossless through the checkpoint schema's add struct
+    a = F.from_json("delta_add_json",
+                    checkpoint_spark_schema()["add"].dataType)
     df = src.select(
         F.col("location").alias("path"),
         F.lit(True).alias("is_add"),

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from typing import Optional
 
 from pyspark.sql import SparkSession
@@ -641,7 +642,11 @@ def convert_to_delta(spark: SparkSession, path: str,
                      collect_stats: bool = True) -> DeltaLog:
     """Parquet directory → delta table in place
     (ConvertToDeltaCommandBase): list files, infer schema (Spark does it
-    distributed), collect footer stats, commit version 0."""
+    distributed), collect footer stats, commit version 0. ``path`` is a
+    directory or the qualified identifier ``parquet.`<directory>```."""
+    m = re.fullmatch(r"(?is)\s*parquet\.`([^`]+)`\s*", path)
+    if m:
+        path = m.group(1)
     log = DeltaLog.for_table(path)
     if log.table_exists():
         return log  # idempotent, like the reference

@@ -18,8 +18,10 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import tempfile
 import threading
+import uuid
 from typing import Optional
 
 import pyarrow as pa
@@ -67,11 +69,23 @@ _COMPACTED_RE = re.compile(r"^(\d{20})\.(\d{20})\.compacted\.json$")
 DEFAULT_CHECKPOINT_INTERVAL = 10
 DEFAULT_DELETED_FILE_RETENTION_MS = 7 * 24 * 3600 * 1000  # delta.deletedFileRetentionDuration
 DEFAULT_LOG_RETENTION_MS = 30 * 24 * 3600 * 1000
+# auto multi-part: a checkpoint of more than twice this many actions
+# with no delta.checkpoint.partSize is split into parts of about this
+# many actions (at most 64) — a DEVIATION from the reference, which
+# writes one file unless partSize is set. At 10⁶ actions a single-file
+# checkpoint caps the replay read at its row-group count (~7 tasks for
+# 28 MB), so planning parallelism dies where it matters most; setting
+# partSize above the action count keeps one file (README "Scope and
+# known deviations")
+AUTO_PART_ACTIONS = 100_000
 
 
 # -------------------------------------------------- checkpoint schema ----
 
 def _checkpoint_arrow_schema() -> pa.Schema:
+    """The SingleAction checkpoint row: the one definition of the
+    action schema. Spark readers take it through
+    ``checkpoint_spark_schema``."""
     smap = pa.map_(pa.string(), pa.string())
     dv = pa.struct([
         ("storageType", pa.string()),
@@ -126,12 +140,125 @@ def _checkpoint_arrow_schema() -> pa.Schema:
     ])
 
 
+def checkpoint_spark_schema():
+    """``_checkpoint_arrow_schema`` as a Spark StructType."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return from_arrow_schema(_checkpoint_arrow_schema())
+
+
 def _tuples_to_dict(v):
     if v is None:
         return {}
     if isinstance(v, dict):
         return v
     return dict(v)
+
+
+# --------------------------------------------------- checkpoint rules ----
+# shared by the driver writer (write_checkpoint) and the Spark-job writer
+# (write_checkpoint_distributed)
+
+def _interval_ms(cfg: dict, key: str, default):
+    """Table property ``key`` as an interval in ms, else ``default``."""
+    ms = parse_interval_ms(cfg.get(key) or "")
+    return default if ms is None else ms
+
+
+def _tombstone_cutoff(cfg: dict) -> int:
+    """InMemoryLogReplay minFileRetentionTimestamp: tombstones deleted
+    before this drop out of the checkpoint (DeltaRetentionSuite
+    "RemoveFiles get deleted during checkpoint") — otherwise checkpoints
+    of churny tables carry every remove ever made."""
+    return current_time_millis() - _interval_ms(
+        cfg, "delta.deletedFileRetentionDuration",
+        DEFAULT_DELETED_FILE_RETENTION_MS)
+
+
+def _metadata_rows(snap: Snapshot) -> list[dict]:
+    """The metadata-class checkpoint rows (protocol, metaData, txn,
+    domainMetadata) of a full or light snapshot."""
+    p, m = snap.protocol, snap.metadata
+    rows: list[dict] = [{"protocol": {
+        "minReaderVersion": p.minReaderVersion,
+        "minWriterVersion": p.minWriterVersion,
+        "readerFeatures": p.readerFeatures,
+        "writerFeatures": p.writerFeatures}}]
+    if m is not None:
+        rows.append({"metaData": {
+            "id": m.id, "name": m.name, "description": m.description,
+            "format": {"provider": m.format.provider,
+                       "options": m.format.options or {}},
+            "schemaString": m.schemaString,
+            "partitionColumns": list(m.partitionColumns or []),
+            "configuration": m.configuration or {},
+            "createdTime": m.createdTime}})
+    # delta.setTransactionRetentionDuration (DeltaConfigs
+    # TRANSACTION_ID_RETENTION_DURATION / InMemoryLogReplay
+    # minSetTransactionRetentionTimestamp): expire idempotent-write
+    # markers at checkpoint time so long-lived tables don't carry every
+    # app id forever
+    ret = _interval_ms(snap.configuration,
+                       "delta.setTransactionRetentionDuration", None)
+    cutoff = None if ret is None else current_time_millis() - ret
+    for t in snap.set_transactions.values():
+        if (cutoff is not None and t.lastUpdated is not None
+                and t.lastUpdated < cutoff):
+            continue
+        rows.append({"txn": {"appId": t.appId, "version": t.version,
+                             "lastUpdated": t.lastUpdated}})
+    for dm in snap.domain_metadata.values():
+        rows.append({"domainMetadata": {
+            "domain": dm.domain, "configuration": dm.configuration,
+            "removed": dm.removed}})
+    return rows
+
+
+def checkpoint_part_count(cfg: dict, total: int) -> int:
+    """Files to split ``total`` checkpoint actions into: one per
+    ``delta.checkpoint.partSize`` actions when set, else the
+    AUTO_PART_ACTIONS rule."""
+    try:
+        part_size = int(cfg.get("delta.checkpoint.partSize", "0"))
+    except (TypeError, ValueError):
+        part_size = 0
+    if part_size > 0:
+        return max(1, -(-total // part_size))
+    if total > 2 * AUTO_PART_ACTIONS:
+        return min(64, -(-total // AUTO_PART_ACTIONS))
+    return 1
+
+
+def _is_v2_policy(cfg: dict) -> bool:
+    return str(cfg.get("delta.checkpointPolicy", "classic")).lower() == "v2"
+
+
+def _write_action_rows(path: str, rows: list[dict]) -> None:
+    """SingleAction parquet of ``rows``, renamed into place."""
+    schema = _checkpoint_arrow_schema()
+    cols = {n: [row.get(n) for row in rows] for n in schema.names}
+    pq.write_table(pa.Table.from_pydict(cols, schema=schema), path + ".tmp")
+    os.replace(path + ".tmp", path)
+
+
+def _canonical_path_col(col):
+    """The reconciliation key of a log path as a Column: decoded, with
+    the file: scheme stripped, like the python replay (util.
+    canonical_log_path); '+' is pre-escaped because url_decode
+    form-decodes it to a space."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_replace(
+        F.url_decode(F.regexp_replace(col, r"\+", "%2B")), "^file:/*", "/")
+
+
+def _commit_version_col():
+    """Version of the commit JSON each row was read from."""
+    from pyspark.sql import functions as F
+
+    return F.regexp_extract(
+        F.url_decode(F.input_file_name()), r"(\d{20})[^/]*\.json$", 1
+    ).cast("long")
 
 
 class DeltaLog:
@@ -874,6 +1001,7 @@ class DeltaLog:
         """
         from pyspark.sql import Window
         from pyspark.sql import functions as F
+        from pyspark.sql import types as T
 
         if version is None:
             version = self.latest_version()
@@ -891,8 +1019,6 @@ class DeltaLog:
             return empty
 
         def _norm(df, ver_col):
-            from pyspark.sql import types as T
-
             def has_field(col, field):
                 if col not in df.columns:
                     return False
@@ -925,8 +1051,6 @@ class DeltaLog:
                 (type widening after checkpoint), requested fields the
                 stored struct lacks (columns added after checkpoint)
                 null out — the skipping filter treats null as keep."""
-                from pyspark.sql import types as T
-
                 if not has_field("add", "stats_parsed"):
                     return F.lit(None).cast(stats_struct)
                 src_t = df.schema["add"].dataType["stats_parsed"].dataType
@@ -1007,53 +1131,20 @@ class DeltaLog:
             top = spark.read.parquet(*ck_paths)
             ck_df = _norm(top, F.lit(ck).cast("long"))
         if commit_paths:
-            from pyspark.sql import types as T
-
             # explicit action schema: ONE pass over the commit JSONs
             # (inference would read everything twice) and native
             # map-typed partitionValues
-            dv_t = T.StructType([
-                T.StructField("storageType", T.StringType()),
-                T.StructField("pathOrInlineDv", T.StringType()),
-                T.StructField("offset", T.LongType()),
-                T.StructField("sizeInBytes", T.LongType()),
-                T.StructField("cardinality", T.LongType()),
-            ])
-            action_schema = T.StructType([
-                T.StructField("add", T.StructType([
-                    T.StructField("path", T.StringType()),
-                    T.StructField("partitionValues",
-                                  T.MapType(T.StringType(), T.StringType())),
-                    T.StructField("size", T.LongType()),
-                    T.StructField("modificationTime", T.LongType()),
-                    T.StructField("dataChange", T.BooleanType()),
-                    T.StructField("stats", T.StringType()),
-                    T.StructField("deletionVector", dv_t),
-                    T.StructField("tags",
-                                  T.MapType(T.StringType(), T.StringType())),
-                    T.StructField("baseRowId", T.LongType()),
-                    T.StructField("defaultRowCommitVersion", T.LongType()),
-                    T.StructField("clusteringProvider", T.StringType()),
-                ])),
-                T.StructField("remove", T.StructType([
-                    T.StructField("path", T.StringType()),
-                ])),
-            ])
-            cj = spark.read.schema(action_schema).json(commit_paths)
-            ver = F.regexp_extract(
-                F.url_decode(F.input_file_name()), r"(\d{20})[^/]*\.json$", 1
-            ).cast("long")
-            tail_df = _norm(cj, ver)
+            full = checkpoint_spark_schema()
+            cj = spark.read.schema(T.StructType([full["add"], full["remove"]])
+                                   ).json(commit_paths)
+            tail_df = _norm(cj, _commit_version_col())
         else:
             tail_df = None
         if ck_df is None and tail_df is None:
             return self.state_df(spark, -1, stats_struct)
-        # reconcile on the CANONICAL path (decoded, file:-scheme
-        # stripped) like the python replay / InMemoryLogReplay; '+' is
-        # pre-escaped because url_decode form-decodes it to a space
-        canon = F.regexp_replace(
-            F.url_decode(F.regexp_replace(F.col("path"), r"\+", "%2B")),
-            "^file:/*", "/")
+        # reconcile on the CANONICAL path like the python replay /
+        # InMemoryLogReplay
+        canon = _canonical_path_col(F.col("path"))
         drop_cols = ("__canon", "is_add", "is_file_action")
 
         def reconcile(df):
@@ -1214,15 +1305,17 @@ class DeltaLog:
                 .drop("__prev"))
 
     def write_checkpoint(self, snap: Optional[Snapshot] = None) -> None:
-        """Classic V1 checkpoint: Parquet of SingleAction rows +
-        `_last_checkpoint` pointer (Checkpoints.scala:670).  When the
-        action count exceeds ``delta.checkpoint.partSize`` the file is
-        split into `<v>.checkpoint.<part>.<parts>.parquet` (classic
-        multi-part, Checkpoints.scala checkpointFileWithParts) — at
-        100 TB a table has millions of AddFiles and a single checkpoint
-        parquet becomes both a write bottleneck and an
-        un-parallelizable read; parts let executors scan the log state
-        in parallel."""
+        """Checkpoint written on the driver from a replayed snapshot:
+        Parquet of SingleAction rows + `_last_checkpoint` pointer
+        (Checkpoints.scala:670). When ``checkpoint_part_count`` asks
+        for more than one file the actions are split into
+        `<v>.checkpoint.<part>.<parts>.parquet` (classic multi-part,
+        Checkpoints.scala checkpointFileWithParts) — at 100 TB a table
+        has millions of AddFiles and a single checkpoint parquet becomes
+        both a write bottleneck and an un-parallelizable read; parts let
+        executors scan the log state in parallel. Under
+        ``delta.checkpointPolicy=v2`` the file actions go to sidecars
+        instead (``_write_v2_top``)."""
         snap = snap or self.update()
         if snap.version < 0:
             return
@@ -1230,218 +1323,71 @@ class DeltaLog:
         # local _delta_log yet — checkpoints/bulk bytes always land on
         # the (object) store side of the seam
         os.makedirs(self.log_path, exist_ok=True)
-        rows: list[dict] = []
-        rows.append({"protocol": {
-            "minReaderVersion": snap.protocol.minReaderVersion,
-            "minWriterVersion": snap.protocol.minWriterVersion,
-            "readerFeatures": snap.protocol.readerFeatures,
-            "writerFeatures": snap.protocol.writerFeatures}})
-        if snap.metadata is not None:
-            m = snap.metadata
-            rows.append({"metaData": {
-                "id": m.id, "name": m.name, "description": m.description,
-                "format": {"provider": m.format.provider, "options": m.format.options or {}},
-                "schemaString": m.schemaString,
-                "partitionColumns": m.partitionColumns,
-                "configuration": m.configuration or {},
-                "createdTime": m.createdTime,
-            }})
-        # delta.setTransactionRetentionDuration (DeltaConfigs
-        # TRANSACTION_ID_RETENTION_DURATION / InMemoryLogReplay
-        # minSetTransactionRetentionTimestamp): expire idempotent-write
-        # markers at checkpoint time so long-lived tables don't carry
-        # every app id forever
-        txn_cutoff = None
-        ret = snap.configuration.get("delta.setTransactionRetentionDuration")
-        if ret:
-            ms = parse_interval_ms(ret)
-            if ms is not None:
-                txn_cutoff = current_time_millis() - ms
-        for t in snap.set_transactions.values():
-            if (txn_cutoff is not None and t.lastUpdated is not None
-                    and t.lastUpdated < txn_cutoff):
-                continue
-            rows.append({"txn": {"appId": t.appId, "version": t.version, "lastUpdated": t.lastUpdated}})
-        for dm in snap.domain_metadata.values():
-            rows.append({"domainMetadata": {"domain": dm.domain, "configuration": dm.configuration,
-                                            "removed": dm.removed}})
-        for f in snap.active.values():
-            rows.append({"add": {
-                "path": f.path, "partitionValues": f.partitionValues or {},
-                "size": f.size, "modificationTime": f.modificationTime,
-                "dataChange": False if f.dataChange is None else bool(f.dataChange),
-                "stats": f.stats,
-                "deletionVector": f.deletionVector,
-                "tags": f.tags,
-                "baseRowId": f.baseRowId,
-                "defaultRowCommitVersion": f.defaultRowCommitVersion,
-                "clusteringProvider": f.clusteringProvider,
-            }})
-        # InMemoryLogReplay minFileRetentionTimestamp: tombstones older
-        # than delta.deletedFileRetentionDuration drop out of the
-        # checkpoint (DeltaRetentionSuite "RemoveFiles get deleted
-        # during checkpoint") — otherwise checkpoints of churny tables
-        # carry every remove ever made
-        ret_ms = None
-        cfg_ret = snap.configuration.get("delta.deletedFileRetentionDuration")
-        if cfg_ret:
-            ret_ms = parse_interval_ms(cfg_ret)
-        if ret_ms is None:
-            ret_ms = DEFAULT_DELETED_FILE_RETENTION_MS
-        tomb_cutoff = current_time_millis() - ret_ms
-        for r in snap.tombstones.values():
-            if (r.deletionTimestamp or 0) < tomb_cutoff:
-                continue
-            rows.append({"remove": {
-                "path": r.path, "deletionTimestamp": r.deletionTimestamp,
-                "dataChange": bool(r.dataChange), "partitionValues": r.partitionValues or {},
-                "size": r.size,
-            }})
-        schema = _checkpoint_arrow_schema()
-        part_size = None
-        try:
-            part_size = int(snap.configuration.get(
-                "delta.checkpoint.partSize", "0")) or None
-        except (TypeError, ValueError):
-            pass
-        policy = str(snap.configuration.get(
-            "delta.checkpointPolicy", "classic")).lower()
-        if policy == "v2":
-            self._write_v2_checkpoint(snap, rows, schema, part_size)
-            return
-        if part_size and len(rows) > part_size:
-            parts = -(-len(rows) // part_size)
-            for i in range(parts):
-                chunk = rows[i * part_size:(i + 1) * part_size]
-                cols = {name: [row.get(name) for row in chunk]
-                        for name in schema.names}
-                path = self.checkpoint_part_file(snap.version, i + 1, parts)
-                tmp = path + ".tmp"
-                pq.write_table(pa.Table.from_pydict(cols, schema=schema), tmp)
-                os.replace(tmp, path)
-            last = {"version": snap.version, "size": len(rows),
-                    "parts": parts}
+        cfg, version = snap.configuration, snap.version
+        file_rows = [{"add": {
+            "path": f.path, "partitionValues": f.partitionValues or {},
+            "size": f.size, "modificationTime": f.modificationTime,
+            "dataChange": False if f.dataChange is None else bool(f.dataChange),
+            "stats": f.stats,
+            "deletionVector": f.deletionVector,
+            "tags": f.tags,
+            "baseRowId": f.baseRowId,
+            "defaultRowCommitVersion": f.defaultRowCommitVersion,
+            "clusteringProvider": f.clusteringProvider,
+        }} for f in snap.active.values()]
+        tomb_cutoff = _tombstone_cutoff(cfg)
+        file_rows += [{"remove": {
+            "path": r.path, "deletionTimestamp": r.deletionTimestamp,
+            "dataChange": bool(r.dataChange),
+            "partitionValues": r.partitionValues or {}, "size": r.size,
+        }} for r in snap.tombstones.values()
+            if (r.deletionTimestamp or 0) >= tomb_cutoff]
+        meta_rows = _metadata_rows(snap)
+        total = len(meta_rows) + len(file_rows)
+
+        def split(rows, n):
+            return [rows[i * len(rows) // n:(i + 1) * len(rows) // n]
+                    for i in range(n)]
+
+        parts = 1
+        if _is_v2_policy(cfg):
+            n = checkpoint_part_count(cfg, len(file_rows))
+            sidecars = [self._new_sidecar_path() for _ in range(n)]
+            for path, chunk in zip(sidecars, split(file_rows, n)):
+                _write_action_rows(path, chunk)
+            self._write_v2_top(version, meta_rows, sidecars)
         else:
-            cols = {name: [row.get(name) for row in rows]
-                    for name in schema.names}
-            table = pa.Table.from_pydict(cols, schema=schema)
-            path = self.checkpoint_file(snap.version)
-            tmp = path + ".tmp"
-            pq.write_table(table, tmp)
-            os.replace(tmp, path)
-            last = {"version": snap.version, "size": len(rows)}
-        lc = os.path.join(self.log_path, "_last_checkpoint")
-        with open(lc + ".tmp", "w") as f:
-            f.write(json.dumps(last))
-        os.replace(lc + ".tmp", lc)
-
-
-    def _single_action_spark_schema(self):
-        """Spark StructType mirroring the SingleAction checkpoint row
-        (same shape `_checkpoint_arrow_schema` writes)."""
-        from pyspark.sql import types as T
-
-        smap = T.MapType(T.StringType(), T.StringType())
-        dv = T.StructType([
-            T.StructField("storageType", T.StringType()),
-            T.StructField("pathOrInlineDv", T.StringType()),
-            T.StructField("offset", T.LongType()),
-            T.StructField("sizeInBytes", T.LongType()),
-            T.StructField("cardinality", T.LongType()),
-        ])
-        add = T.StructType([
-            T.StructField("path", T.StringType()),
-            T.StructField("partitionValues", smap),
-            T.StructField("size", T.LongType()),
-            T.StructField("modificationTime", T.LongType()),
-            T.StructField("dataChange", T.BooleanType()),
-            T.StructField("stats", T.StringType()),
-            T.StructField("deletionVector", dv),
-            T.StructField("tags", smap),
-            T.StructField("baseRowId", T.LongType()),
-            T.StructField("defaultRowCommitVersion", T.LongType()),
-            T.StructField("clusteringProvider", T.StringType()),
-        ])
-        remove = T.StructType([
-            T.StructField("path", T.StringType()),
-            T.StructField("deletionTimestamp", T.LongType()),
-            T.StructField("dataChange", T.BooleanType()),
-            T.StructField("partitionValues", smap),
-            T.StructField("size", T.LongType()),
-        ])
-        metadata = T.StructType([
-            T.StructField("id", T.StringType()),
-            T.StructField("name", T.StringType()),
-            T.StructField("description", T.StringType()),
-            T.StructField("format", T.StructType([
-                T.StructField("provider", T.StringType()),
-                T.StructField("options", smap)])),
-            T.StructField("schemaString", T.StringType()),
-            T.StructField("partitionColumns", T.ArrayType(T.StringType())),
-            T.StructField("configuration", smap),
-            T.StructField("createdTime", T.LongType()),
-        ])
-        protocol = T.StructType([
-            T.StructField("minReaderVersion", T.IntegerType()),
-            T.StructField("minWriterVersion", T.IntegerType()),
-            T.StructField("readerFeatures", T.ArrayType(T.StringType())),
-            T.StructField("writerFeatures", T.ArrayType(T.StringType())),
-        ])
-        txn = T.StructType([
-            T.StructField("appId", T.StringType()),
-            T.StructField("version", T.LongType()),
-            T.StructField("lastUpdated", T.LongType()),
-        ])
-        domain = T.StructType([
-            T.StructField("domain", T.StringType()),
-            T.StructField("configuration", T.StringType()),
-            T.StructField("removed", T.BooleanType()),
-        ])
-        ckpt_meta = T.StructType([
-            T.StructField("version", T.LongType()),
-            T.StructField("tags", smap),
-        ])
-        sidecar = T.StructType([
-            T.StructField("path", T.StringType()),
-            T.StructField("sizeInBytes", T.LongType()),
-            T.StructField("modificationTime", T.LongType()),
-            T.StructField("tags", smap),
-        ])
-        return T.StructType([
-            T.StructField("add", add), T.StructField("remove", remove),
-            T.StructField("metaData", metadata),
-            T.StructField("protocol", protocol),
-            T.StructField("txn", txn),
-            T.StructField("domainMetadata", domain),
-            T.StructField("checkpointMetadata", ckpt_meta),
-            T.StructField("sidecar", sidecar),
-        ])
+            parts = checkpoint_part_count(cfg, total)
+            for path, chunk in zip(self._checkpoint_targets(version, parts),
+                                   split(meta_rows + file_rows, parts)):
+                _write_action_rows(path, chunk)
+        self._write_last_checkpoint(version, total, parts)
 
     def write_checkpoint_distributed(self, spark,
                                      version: Optional[int] = None) -> bool:
-        """Classic checkpoint written WITHOUT materializing file state
-        on the driver (Checkpoints.scala writes checkpoints as a Spark
-        job for exactly this reason): executors read the previous
-        checkpoint + commit JSONs, reconcile the newest action per path
-        (adds stay live entries, removes stay tombstones — identical to
-        the python replay, tests prove parity), and write the
-        SingleAction parquet directly. Only the O(1) metadata-class
-        rows pass through the driver. Returns False when the layout
-        needs the python writer (V2 checkpoint policy)."""
+        """Checkpoint written WITHOUT materializing file state on the
+        driver (Checkpoints.scala writes checkpoints as a Spark job for
+        exactly this reason): executors read the previous checkpoint +
+        commit JSONs, reconcile the newest action per path (adds stay
+        live entries, removes stay tombstones — identical to the python
+        replay, tests prove parity), and write the SingleAction parquet
+        directly: classic single or multi-part files, or, under
+        ``delta.checkpointPolicy=v2``, sidecars below a driver-written
+        top file. Only the O(1) metadata-class rows pass through the
+        driver. Returns False, writing nothing, when the table has no
+        version or no log file to read."""
+        from pyspark import StorageLevel
         from pyspark.sql import Window
         from pyspark.sql import functions as F
-
-        os.makedirs(self.log_path, exist_ok=True)
 
         if version is None:
             version = self.latest_version()
         if version < 0:
             return False
+        os.makedirs(self.log_path, exist_ok=True)
         light = self.light_snapshot(version)
         cfg = light.configuration
-        policy = str(cfg.get("delta.checkpointPolicy", "classic")).lower()
-
-        target = self._single_action_spark_schema()
+        target = checkpoint_spark_schema()
         add_t = target["add"].dataType
         remove_t = target["remove"].dataType
 
@@ -1457,14 +1403,11 @@ class DeltaLog:
         sources = []
         ck, ck_paths, commit_paths = self._log_segment_paths(version)
         if ck_paths:
-            top = spark.read.parquet(*ck_paths)
-            sources.append(norm(top, F.lit(ck).cast("long")))
+            sources.append(norm(spark.read.parquet(*ck_paths),
+                                F.lit(ck).cast("long")))
         if commit_paths:
-            cj = spark.read.json(commit_paths, schema=target)
-            ver = F.regexp_extract(
-                F.url_decode(F.input_file_name()), r"(\d{20})[^/]*\.json$", 1
-            ).cast("long")
-            sources.append(norm(cj, ver))
+            sources.append(norm(spark.read.json(commit_paths, schema=target),
+                                _commit_version_col()))
         if not sources:
             return False
         allacts = sources[0]
@@ -1472,90 +1415,29 @@ class DeltaLog:
             allacts = allacts.unionByName(s)
         allacts = allacts.filter(F.col("add.path").isNotNull()
                                  | F.col("remove.path").isNotNull())
-        raw = F.coalesce(F.col("add.path"), F.col("remove.path"))
-        # canonical reconciliation key, mirroring state_df / the python
-        # replay ('+' pre-escaped for url_decode's form decoding)
-        w = Window.partitionBy(
-            F.regexp_replace(
-                F.url_decode(F.regexp_replace(raw, r"\+", "%2B")),
-                "^file:/*", "/")
+        w = Window.partitionBy(_canonical_path_col(
+            F.coalesce(F.col("add.path"), F.col("remove.path")))
         ).orderBy(F.desc("__v"), F.desc(F.col("add.path").isNotNull()))
         fdf = (allacts.withColumn("__rn", F.row_number().over(w))
                .filter(F.col("__rn") == 1)
                .select("add", "remove"))
-        # expire aged tombstones, same cutoff as the python writer
-        # (InMemoryLogReplay minFileRetentionTimestamp)
-        ret_ms = parse_interval_ms(
-            cfg.get("delta.deletedFileRetentionDuration") or "") \
-            if cfg.get("delta.deletedFileRetentionDuration") else None
-        if ret_ms is None:
-            ret_ms = DEFAULT_DELETED_FILE_RETENTION_MS
-        tomb_cutoff = current_time_millis() - ret_ms
         fdf = fdf.filter(
             F.col("remove.path").isNull()
             | (F.coalesce(F.col("remove.deletionTimestamp"), F.lit(0))
-               >= F.lit(tomb_cutoff)))
+               >= F.lit(_tombstone_cutoff(cfg))))
         for f in target.fields:
             if f.name not in ("add", "remove"):
                 fdf = fdf.withColumn(f.name, F.lit(None).cast(f.dataType))
         fdf = fdf.select(*[f.name for f in target.fields])
-
-        # metadata-class rows (O(1)) from the light snapshot
-        top_rows: list[dict] = []
-        p = light.protocol
-        top_rows.append({"protocol": {
-            "minReaderVersion": p.minReaderVersion,
-            "minWriterVersion": p.minWriterVersion,
-            "readerFeatures": p.readerFeatures,
-            "writerFeatures": p.writerFeatures}})
-        if light.metadata is not None:
-            m = light.metadata
-            top_rows.append({"metaData": {
-                "id": m.id, "name": m.name, "description": m.description,
-                "format": {"provider": m.format.provider,
-                           "options": m.format.options or {}},
-                "schemaString": m.schemaString,
-                "partitionColumns": list(m.partitionColumns or []),
-                "configuration": m.configuration or {},
-                "createdTime": m.createdTime}})
-        txn_cutoff = None
-        ret = cfg.get("delta.setTransactionRetentionDuration")
-        if ret:
-            ms = parse_interval_ms(ret)
-            if ms is not None:
-                txn_cutoff = current_time_millis() - ms
-        for t in light.set_transactions.values():
-            if (txn_cutoff is not None and t.lastUpdated is not None
-                    and t.lastUpdated < txn_cutoff):
-                continue
-            top_rows.append({"txn": {"appId": t.appId, "version": t.version,
-                                     "lastUpdated": t.lastUpdated}})
-        for dm in light.domain_metadata.values():
-            top_rows.append({"domainMetadata": {
-                "domain": dm.domain, "configuration": dm.configuration,
-                "removed": dm.removed}})
-        top_df = spark.createDataFrame(
-            [{f.name: r.get(f.name) for f in target.fields}
-             for r in top_rows], schema=target)
+        meta_rows = _metadata_rows(light)
 
         # the reconciliation job runs twice (count + write) without
         # this: persist the (narrow, SingleAction-shaped) result so the
         # expensive checkpoint+commit read and per-path window execute
         # once; spill-safe for arbitrarily large file states
-        from pyspark import StorageLevel
-
         fdf = fdf.persist(StorageLevel.MEMORY_AND_DISK)
         n_files = fdf.count()
-        total = n_files + len(top_rows)
-        part_size = None
-        try:
-            part_size = int(cfg.get("delta.checkpoint.partSize", "0")) or None
-        except (TypeError, ValueError):
-            pass
-
-        import shutil as _shutil
-        import uuid as _uuid
-
+        total = n_files + len(meta_rows)
         tmpdir = os.path.join(self.log_path,
                               f".ckpt_tmp_{version}_{os.getpid()}")
 
@@ -1588,125 +1470,72 @@ class DeltaLog:
                 os.path.join(r, n) for r, _d, ns in os.walk(tmpdir)
                 for n in ns if n.endswith(".parquet"))
 
-        if policy == "v2":
-            # V2: the file actions become Spark-written SIDECARS; the
-            # small uuid-named top file (non-file actions +
-            # checkpointMetadata + sidecar pointers) stays driver-side
-            n_parts = (-(-n_files // part_size)
-                       if part_size and n_files > part_size else 1)
-            side_dir = os.path.join(self.log_path, SIDECAR_DIR)
-            os.makedirs(side_dir, exist_ok=True)
-            written = _spark_write(fdf, n_parts)
-            sidecar_rows = []
-            try:
-                for src in written:
-                    name = f"{_uuid.uuid4()}.parquet"
-                    dst = os.path.join(side_dir, name)
+        parts = 1
+        try:
+            if _is_v2_policy(cfg):
+                written = _spark_write(
+                    fdf, checkpoint_part_count(cfg, n_files))
+                sidecars = [self._new_sidecar_path() for _ in written]
+                for src, dst in zip(written, sidecars):
                     os.replace(src, dst)
-                    st = os.stat(dst)
-                    sidecar_rows.append({"sidecar": {
-                        "path": name, "sizeInBytes": st.st_size,
-                        "modificationTime": int(st.st_mtime * 1000)}})
-            finally:
-                _shutil.rmtree(tmpdir, ignore_errors=True)
-            top = (top_rows
-                   + [{"checkpointMetadata": {"version": version}}]
-                   + sidecar_rows)
-            schema = _checkpoint_arrow_schema()
-            pa_cols = {n: [row.get(n) for row in top] for n in schema.names}
-            path = os.path.join(
-                self.log_path,
-                "%020d.checkpoint.%s.parquet" % (version, _uuid.uuid4()))
-            pq.write_table(pa.Table.from_pydict(pa_cols, schema=schema),
-                           path + ".tmp")
-            os.replace(path + ".tmp", path)
-            last = {"version": version, "size": total}
-        else:
-            auto_mp = str(cfg.get(
-                "delta_spark.checkpoint.autoMultiPart", "true")).lower() != "false"
-            if part_size and total > part_size:
-                n_parts = -(-total // part_size)
-            elif total > 200_000 and not part_size and auto_mp:
-                # auto multi-part for big states — a DEVIATION from the
-                # reference, which writes a single-file checkpoint
-                # unless delta.checkpoint.partSize is configured. At
-                # 10⁶ actions a single-file checkpoint caps the replay
-                # read at its row-group count — ~7 tasks for 28 MB — so
-                # planning parallelism dies exactly where it matters
-                # most. ~100k actions per part keeps files big enough
-                # to amortize open cost while restoring full-width
-                # reads. External readers with weak multi-part support
-                # can opt out with
-                # delta_spark.checkpoint.autoMultiPart=false (documented
-                # in README "Scope and known deviations").
-                n_parts = min(64, -(-total // 100_000))
+                self._write_v2_top(version, meta_rows, sidecars)
             else:
-                n_parts = 1
-            written = _spark_write(top_df.unionByName(fdf), n_parts)
-            try:
-                if len(written) == 1:
-                    os.replace(written[0], self.checkpoint_file(version))
-                    last = {"version": version, "size": total}
-                else:
-                    for i, src in enumerate(written):
-                        os.replace(src, self.checkpoint_part_file(
-                            version, i + 1, len(written)))
-                    last = {"version": version, "size": total,
-                            "parts": len(written)}
-            finally:
-                _shutil.rmtree(tmpdir, ignore_errors=True)
-        fdf.unpersist()
+                top_df = spark.createDataFrame(
+                    [{f.name: r.get(f.name) for f in target.fields}
+                     for r in meta_rows], schema=target)
+                written = _spark_write(top_df.unionByName(fdf),
+                                       checkpoint_part_count(cfg, total))
+                parts = len(written)
+                for src, dst in zip(written,
+                                    self._checkpoint_targets(version, parts)):
+                    os.replace(src, dst)
+        finally:
+            shutil.rmtree(tmpdir, ignore_errors=True)
+            fdf.unpersist()
+        self._write_last_checkpoint(version, total, parts)
+        return True
+
+    def _checkpoint_targets(self, version: int, n: int) -> list[str]:
+        """Classic checkpoint file names for ``n`` parts."""
+        if n == 1:
+            return [self.checkpoint_file(version)]
+        return [self.checkpoint_part_file(version, i + 1, n)
+                for i in range(n)]
+
+    def _new_sidecar_path(self) -> str:
+        side_dir = os.path.join(self.log_path, SIDECAR_DIR)
+        os.makedirs(side_dir, exist_ok=True)
+        return os.path.join(side_dir, f"{uuid.uuid4()}.parquet")
+
+    def _write_v2_top(self, version: int, meta_rows: list[dict],
+                      sidecars: list[str]) -> None:
+        """V2 checkpoint (PROTOCOL.md V2 spec) top file: the uuid-named
+        `<v>.checkpoint.<uuid>.parquet` holding the non-file actions,
+        ``checkpointMetadata`` and one ``sidecar`` pointer per file-
+        action parquet already written under ``_delta_log/_sidecars/``.
+        Readers list one small top file and can fan sidecar scans out
+        across executors — at millions of files this is what keeps
+        snapshot construction parallel."""
+        rows = meta_rows + [{"checkpointMetadata": {"version": version}}]
+        for path in sidecars:
+            st = os.stat(path)
+            rows.append({"sidecar": {
+                "path": os.path.basename(path), "sizeInBytes": st.st_size,
+                "modificationTime": int(st.st_mtime * 1000)}})
+        _write_action_rows(os.path.join(
+            self.log_path,
+            "%020d.checkpoint.%s.parquet" % (version, uuid.uuid4())), rows)
+
+    def _write_last_checkpoint(self, version: int, size: int,
+                               parts: int) -> None:
+        """The `_last_checkpoint` pointer (Checkpoints.scala
+        LastCheckpointInfo); ``parts`` only for a multi-part set."""
+        last = {"version": version, "size": size}
+        if parts > 1:
+            last["parts"] = parts
         lc = os.path.join(self.log_path, "_last_checkpoint")
         with open(lc + ".tmp", "w") as f:
             f.write(json.dumps(last))
-        os.replace(lc + ".tmp", lc)
-        return True
-
-    def _write_v2_checkpoint(self, snap: Snapshot, rows: list[dict],
-                             schema, part_size: Optional[int]) -> None:
-        """V2 checkpoint (PROTOCOL.md V2 spec): file actions go to
-        uniquely-named sidecar parquets under ``_delta_log/_sidecars/``;
-        the uuid-named top-level checkpoint holds the non-file actions
-        plus ``checkpointMetadata`` and one ``sidecar`` pointer per
-        sidecar.  Readers list one small top file and can fan sidecar
-        scans out across executors — at millions of files this is what
-        keeps snapshot construction parallel."""
-        import uuid as _uuid
-
-        file_rows = [r for r in rows if "add" in r or "remove" in r]
-        top_rows = [r for r in rows if "add" not in r and "remove" not in r]
-        side_dir = os.path.join(self.log_path, SIDECAR_DIR)
-        os.makedirs(side_dir, exist_ok=True)
-        chunk = part_size or max(len(file_rows), 1)
-        sidecar_rows = []
-        for i in range(0, max(len(file_rows), 1), chunk):
-            piece = file_rows[i:i + chunk]
-            name = f"{_uuid.uuid4()}.parquet"
-            spath = os.path.join(side_dir, name)
-            cols = {n: [row.get(n) for row in piece] for n in schema.names}
-            pq.write_table(pa.Table.from_pydict(cols, schema=schema),
-                           spath + ".tmp")
-            os.replace(spath + ".tmp", spath)
-            st = os.stat(spath)
-            sidecar_rows.append({"sidecar": {
-                "path": name, "sizeInBytes": st.st_size,
-                "modificationTime": int(st.st_mtime * 1000)}})
-        top = (top_rows
-               + [{"checkpointMetadata": {"version": snap.version}}]
-               + sidecar_rows)
-        cols = {n: [row.get(n) for row in top] for n in schema.names}
-        path = os.path.join(
-            self.log_path,
-            "%020d.checkpoint.%s.parquet" % (snap.version, _uuid.uuid4()))
-        pq.write_table(pa.Table.from_pydict(cols, schema=schema),
-                       path + ".tmp")
-        os.replace(path + ".tmp", path)
-        last = {"version": snap.version, "size": len(rows),
-                "checkpointSchema": None}
-        lc = os.path.join(self.log_path, "_last_checkpoint")
-        with open(lc + ".tmp", "w") as f:
-            f.write(json.dumps({k: v for k, v in last.items()
-                                if v is not None}))
         os.replace(lc + ".tmp", lc)
 
     def _apply_checkpoint(self, snap: Snapshot, version: int,
@@ -1929,12 +1758,9 @@ class DeltaLog:
     # ------------------------------------------------------- retention ----
 
     def log_retention_ms(self) -> int:
-        cfg = self.update().configuration.get("delta.logRetentionDuration")
-        if cfg:
-            ms = parse_interval_ms(cfg)
-            if ms is not None:
-                return ms
-        return DEFAULT_LOG_RETENTION_MS
+        return _interval_ms(self.update().configuration,
+                            "delta.logRetentionDuration",
+                            DEFAULT_LOG_RETENTION_MS)
 
     def cleanup_expired_logs(self, now_ms: Optional[int] = None) -> int:
         """MetadataCleanup: delete commit json + checkpoint files older
@@ -1967,10 +1793,9 @@ class DeltaLog:
         # one snapshot serves retention config, the protection barrier,
         # and (if needed) the barrier checkpoint
         snap = self.update()
-        retention = parse_interval_ms(
-            snap.configuration.get("delta.logRetentionDuration") or "")
-        cutoff = now - (retention if retention is not None
-                        else DEFAULT_LOG_RETENTION_MS)
+        cutoff = now - _interval_ms(snap.configuration,
+                                    "delta.logRetentionDuration",
+                                    DEFAULT_LOG_RETENTION_MS)
         # checkpointProtection (PROTOCOL.md): metadata below the barrier
         # may only go away if the surviving checkpoint sits at/after it —
         # write one at the latest version first, or skip cleanup
@@ -2064,13 +1889,9 @@ class DeltaLog:
         return deleted
 
     def deleted_file_retention_ms(self) -> int:
-        snap = self.update()
-        cfg = snap.configuration.get("delta.deletedFileRetentionDuration")
-        if cfg:
-            ms = parse_interval_ms(cfg)
-            if ms is not None:
-                return ms
-        return DEFAULT_DELETED_FILE_RETENTION_MS
+        return _interval_ms(self.update().configuration,
+                            "delta.deletedFileRetentionDuration",
+                            DEFAULT_DELETED_FILE_RETENTION_MS)
 
     def invalidate(self) -> None:
         with self._lock:

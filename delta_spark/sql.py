@@ -399,7 +399,7 @@ def delta_sql(spark: SparkSession, statement: str) -> Any:
         return spark.createDataFrame([(True,)], "converted: boolean")
 
     m = re.fullmatch(rf"(?is)\s*CONVERT\s+TO\s+DELTA\s+"
-                     rf"(?:parquet\.`(?P<ppath>[^`]+)`|(?:{_PATH}))"
+                     rf"(?:(?P<ppath>parquet\.`[^`]+`)|(?:{_PATH}))"
                      rf"(?P<nostats>\s+NO\s+STATISTICS)?"
                      rf"(?:\s+PARTITIONED\s+BY\s+\((?P<pcols>[^)]+)\))?\s*", s)
     if m:

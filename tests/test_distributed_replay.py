@@ -9,9 +9,12 @@ import time as _time
 
 import pytest
 
+from delta_spark.actions import DomainMetadata, SetTransaction
 from delta_spark.datasets import load_table
 from delta_spark.io import write_delta
 from delta_spark.log import DeltaLog
+from delta_spark.transaction import OptimisticTransaction
+from delta_spark.util import current_time_millis
 
 _SCHEMA = json.dumps({
     "type": "struct",
@@ -499,8 +502,17 @@ def test_distributed_checkpoint_parity(spark, tmp_path, sf_dir):
     write_delta(li.limit(200), a, mode="append")
     DeltaLog.for_table(a).write_checkpoint()  # earlier python checkpoint
     write_delta(li.limit(50), a, mode="append")
-    dt.setProperties({"delta.enableDeletionVectors": "true"})
+    dt.setProperties({"delta.enableDeletionVectors": "true",
+                      "delta.setTransactionRetentionDuration":
+                          "interval 1 days"})
     dt.delete("l_quantity > 40")
+    # one txn inside the retention window, one past it, one domain
+    now = current_time_millis()
+    OptimisticTransaction(DeltaLog.for_table(a)).commit(
+        [SetTransaction("fresh-app", 3, now),
+         SetTransaction("aged-app", 5, now - 3 * 86_400_000),
+         DomainMetadata("test.parity", '{"k":1}', False)],
+        "MANUAL UPDATE")
     b = str(tmp_path / "py")
     _shutil.copytree(a, b)
     DeltaLog.clear_cache()
@@ -521,6 +533,11 @@ def test_distributed_checkpoint_parity(spark, tmp_path, sf_dir):
     assert set(sa.tombstones) == set(sb.tombstones)
     assert sa.metadata.configuration == sb.metadata.configuration
     assert sa.protocol.writerFeatures == sb.protocol.writerFeatures
+    # both writers keep the fresh txn and drop the aged one
+    assert sa.set_transactions == sb.set_transactions
+    assert set(sa.set_transactions) == {"fresh-app"}
+    assert sa.domain_metadata == sb.domain_metadata
+    assert "test.parity" in sa.domain_metadata
     # the data reads the same through either checkpoint
     assert (DeltaTable.forPath(spark, a).toDF().count()
             == DeltaTable.forPath(spark, b).toDF().count())
@@ -603,6 +620,50 @@ def test_distributed_checkpoint_multipart(spark, tmp_path, sf_dir):
     DeltaLog.clear_cache()
     got = {f.path for f in DeltaLog.for_table(a).snapshot_at(v).all_files}
     assert got == want
+
+
+def test_checkpoint_auto_multipart_both_writers(spark, tmp_path,
+                                                monkeypatch):
+    """The auto multi-part rule (no delta.checkpoint.partSize, more than
+    2 × AUTO_PART_ACTIONS actions) is shared: the driver and the
+    distributed writer split the same log into the same number of parts,
+    and each complete set replays to the same state."""
+    import shutil as _shutil
+
+    from delta_spark import log as L
+
+    monkeypatch.setattr(L, "AUTO_PART_ACTIONS", 40)
+    a = str(tmp_path / "drv")
+    os.makedirs(a)
+    _synth_log(a, n_batches=8, adds_per=25)
+    b = str(tmp_path / "dist")
+    _shutil.copytree(a, b)
+    la, lb = DeltaLog.for_table(a), DeltaLog.for_table(b)
+    v = la.latest_version()
+    snap = la.update()
+    want, want_tomb = _key_set(snap.all_files), set(snap.tombstones)
+    total = 2 + len(want) + len(want_tomb)   # + protocol, metaData
+    n_parts = -(-total // 40)
+    assert n_parts > 1
+    la.write_checkpoint(snap)
+    assert lb.write_checkpoint_distributed(spark, v)
+    for p in (a, b):
+        ld = os.path.join(p, "_delta_log")
+        parts = [n for n in os.listdir(ld) if ".checkpoint." in n]
+        assert len(parts) == n_parts
+        assert all(n.endswith(".%010d.parquet" % n_parts) for n in parts)
+        with open(os.path.join(ld, "_last_checkpoint")) as fh:
+            assert json.load(fh) == {"version": v, "size": total,
+                                     "parts": n_parts}
+        # replay through the checkpoint alone
+        for n in os.listdir(ld):
+            if n.endswith(".json"):
+                os.unlink(os.path.join(ld, n))
+        DeltaLog.clear_cache()
+        got = DeltaLog.for_table(p).update()
+        assert got.version == v
+        assert _key_set(got.all_files) == want
+        assert set(got.tombstones) == want_tomb
 
 
 def test_distributed_checkpoint_synth_log(spark, tmp_path):

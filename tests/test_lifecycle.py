@@ -574,6 +574,20 @@ def test_convert_no_statistics_and_parquet_prefix(spark, tmp_path, sf_dir):
         .collect()[0]["c"] == load_table(spark, sf_dir, "supplier").count()
 
 
+def test_convert_to_delta_api_parquet_prefix(spark, tmp_path):
+    """DeltaTable.convertToDelta takes the reference's qualified
+    identifier parquet.`<path>`, in any case, like CONVERT TO DELTA."""
+    p = str(tmp_path / "plain")
+    spark.range(20).write.parquet(p)
+    dt = DeltaTable.convertToDelta(spark, f"parquet.`{p}`")
+    assert dt.toDF().count() == 20
+    assert DeltaLog.for_table(p).update().version == 0
+    q = str(tmp_path / "upper")
+    spark.range(7).write.parquet(q)
+    assert DeltaTable.convertToDelta(
+        spark, f"PARQUET.`{q}`").toDF().count() == 7
+
+
 def test_checkpoint_interval_property(spark, tmp_table):
     """delta.checkpointInterval (DeltaConfigs.CHECKPOINT_INTERVAL)
     overrides the default 10-commit checkpoint cadence."""
@@ -853,18 +867,25 @@ def test_vacuum_lite_reclaims_expired_cdc(spark, tmp_path):
     assert dt.toDF().count() == 9
 
 
-def test_checkpoint_expires_aged_tombstones(spark, tmp_path):
+@pytest.mark.parametrize("writer", ["driver", "distributed"])
+def test_checkpoint_expires_aged_tombstones(spark, tmp_path, writer):
     """DeltaRetentionSuite 'RemoveFiles get deleted during checkpoint if
     retention time has passed': both checkpoint writers drop tombstones
     older than delta.deletedFileRetentionDuration; fresh ones survive."""
+    def checkpoint(path):
+        log = DeltaLog.for_table(path)
+        if writer == "driver":
+            log.write_checkpoint()
+        else:
+            assert log.write_checkpoint_distributed(spark)
+
     p = str(tmp_path / "t")
     write_delta(spark.range(10).withColumnRenamed("id", "a"), p,
                 configuration={
                     "delta.deletedFileRetentionDuration": "interval 0 hours"})
     write_delta(spark.range(4).withColumnRenamed("id", "a"), p,
                 mode="overwrite")
-    log = DeltaLog.for_table(p)
-    log.write_checkpoint()
+    checkpoint(p)
     DeltaLog.clear_cache()
     snap = DeltaLog.for_table(p).update()
     assert snap.tombstones == {}
@@ -874,7 +895,7 @@ def test_checkpoint_expires_aged_tombstones(spark, tmp_path):
     write_delta(spark.range(10).withColumnRenamed("id", "a"), p2)
     write_delta(spark.range(4).withColumnRenamed("id", "a"), p2,
                 mode="overwrite")
-    DeltaLog.for_table(p2).write_checkpoint()
+    checkpoint(p2)
     DeltaLog.clear_cache()
     assert len(DeltaLog.for_table(p2).update().tombstones) > 0
 
