@@ -97,7 +97,7 @@ def resolve_read_path(table_path: str,
 
 def resolve_table_path(path: str) -> str:
     """Apply the single redirect hop for any table-resolution seam
-    (DeltaTable.forPath, the delta_py DataSource read/write legs):
+    (DeltaTable.forPath, the delta_py DataSource read legs):
     returns the destination path when `path` is a REDIRECT-READY
     source, else `path` unchanged. Chains are rejected."""
     from delta_spark.log import DeltaLog

@@ -22,18 +22,14 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass
-from uuid import uuid4
 from typing import Iterator, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
-    DataSourceArrowWriter,
     DataSourceReader,
-    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     InputPartition,
-    WriterCommitMessage,
 )
 
 from delta_spark.actions import AddFile
@@ -47,10 +43,17 @@ from delta_spark.util import deserialize_partition_value, schema_from_json
 def delta_sink(path: str, query_id: str, output_mode: str = "append",
                partition_by: Optional[list[str]] = None):
     """Returns an `(df, batch_id) -> None` function for
-    `writeStream.foreachBatch(...)` with exactly-once semantics."""
+    `writeStream.foreachBatch(...)` with exactly-once semantics.
+    `output_mode` is "append" (each batch appends) or "complete" (each
+    batch replaces the table), the two modes DeltaSink accepts; any
+    other mode raises ValueError here, before a query starts."""
+    if output_mode not in ("append", "complete"):
+        raise ValueError(
+            f"delta sink supports output_mode 'append' or 'complete', "
+            f"got {output_mode!r}")
+    mode = "append" if output_mode == "append" else "overwrite"
 
     def add_batch(df: DataFrame, batch_id: int) -> None:
-        mode = "append" if output_mode == "append" else "overwrite"
         write_delta(df, path, mode=mode, partition_by=partition_by,
                     txn_app_id=query_id, txn_version=batch_id,
                     operation="STREAMING UPDATE")
@@ -312,8 +315,7 @@ def _arrow_view_names(col, tgt_type):
     col-<uuid> names on disk while the logical schema carries the user
     names; pyarrow casts match struct children BY NAME, so the rename
     must happen structurally first (`Array.view` — same buffers, new
-    type). Works in both directions (read: physical→logical; write:
-    logical→physical)."""
+    type). Used on the read side: physical → logical."""
     import pyarrow as pa
 
     def renamed(src, tgt):
@@ -1014,342 +1016,6 @@ class DeltaBatchReader(DataSourceReader):
     read = DeltaStreamReader.read
 
 
-@dataclass
-class _WriteTaskResult(WriterCommitMessage):
-    # per written file: {"rel": dir-relative path, "pvals": {phys: str},
-    #                    "size": int, "mtime": ms, "stats": json}
-    files: list
-
-
-class DeltaArrowBatchWriter(DataSourceArrowWriter):
-    """Batch write half of the python DataSource:
-    `df.write.format("delta_py").mode(m).save(path)`. Executors stream
-    Arrow RecordBatches straight into hive-partitioned parquet files
-    (one ParquetWriter per partition per task) and collect per-file
-    stats from the footers; the driver turns the task results into one
-    transactional commit (Add[+Remove]File actions). Supports append,
-    full overwrite, new-table creation (`partitionBy` option), column
-    mapping, and NOT NULL enforcement. Tables with generated/identity/
-    default columns or CHECK constraints need expression evaluation the
-    DataSource writer cannot see — those route to
-    delta_spark.io.write_delta, which is also the JVM-side fast path."""
-
-    def __init__(self, schema, options, overwrite: bool):
-        from delta_spark.schema import (
-            default_values,
-            generation_expressions,
-            identity_info,
-            logical_to_physical,
-        )
-
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("delta_py writer requires a path")
-        from delta_spark.redirect import resolve_table_path
-
-        self.path = resolve_table_path(self.path)
-        if not DeltaLog.for_table(self.path).table_exists():
-            # same guard as delta_spark.io.write_delta: a literal
-            # `p@vN` / `p@<17 digits>` path whose base IS a table is a
-            # time-travel spec, never a create target
-            import re as _re
-
-            m = _re.fullmatch(r"(.*)@(?:[vV]\d+|\d{17})", self.path)
-            if m and DeltaLog.for_table(m.group(1)).table_exists():
-                raise ValueError(
-                    f"cannot write to a time-travelled table "
-                    f"({self.path!r}); writes must target the live "
-                    f"table {m.group(1)!r}")
-        # fail loudly on write options this path cannot honor — silently
-        # dropping replaceWhere would turn a scoped overwrite into a
-        # full-table wipe
-        unsupported = [o for o in ("replacewhere", "mergeschema",
-                                   "overwriteschema", "replaceon",
-                                   "replaceusing")
-                       if options.get(o)]
-        if str(options.get("partitionoverwritemode", "")).lower() == "dynamic":
-            unsupported.append("partitionOverwriteMode=dynamic")
-        if unsupported:
-            raise NotImplementedError(
-                f"the delta_py writer does not support {unsupported}; "
-                "use delta_spark.io.write_delta")
-        self.overwrite = overwrite
-        log = DeltaLog.for_table(self.path)
-        self.exists = log.table_exists()
-        if self.exists:
-            snap = log.update()
-            from delta_spark.actions import check_write_protocol
-
-            check_write_protocol(snap.protocol)
-            tschema = snap.schema
-            blockers = (set(generation_expressions(tschema))
-                        | set(identity_info(tschema))
-                        | set(default_values(tschema)))
-            from delta_spark.constraints import check_constraints as _cc
-
-            if blockers or _cc(snap.configuration):
-                raise NotImplementedError(
-                    "the delta_py writer does not evaluate generated/"
-                    "identity/default columns or CHECK constraints; use "
-                    "delta_spark.io.write_delta for this table")
-            got = {f.name for f in schema.fields}
-            want = {f.name for f in tschema.fields}
-            if got != want:
-                raise ValueError(
-                    f"schema mismatch: data columns {sorted(got)} != "
-                    f"table columns {sorted(want)}")
-            self.table_schema_json = snap.metadata.schemaString
-            self.part_cols = snap.partition_columns
-            self.cfg = dict(snap.configuration)
-            req = [c.strip() for c in
-                   (options.get("partitionby") or "").split(",") if c.strip()]
-            if req and req != self.part_cols:
-                raise ValueError(
-                    f"partitioning {req} does not match table "
-                    f"partitioning {self.part_cols}")
-        else:
-            self.table_schema_json = schema.json()
-            self.part_cols = [c.strip() for c in
-                              (options.get("partitionby") or "").split(",")
-                              if c.strip()]
-            self.cfg = {}
-        tschema = schema_from_json(self.table_schema_json)
-        self.l2p = logical_to_physical(tschema)
-        self.not_null = [f.name for f in tschema.fields if not f.nullable]
-
-    def write(self, it):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql import types as T
-
-        from delta_spark.stats import (
-            DEFAULT_NUM_INDEXED_COLS,
-            collect_file_stats,
-            file_mtime_ms,
-            stats_columns,
-        )
-        from delta_spark.util import partition_path, serialize_partition_value
-
-        tschema = schema_from_json(self.table_schema_json)
-        types = {f.name: f.dataType for f in tschema.fields}
-        part_phys = [self.l2p.get(c, c) for c in self.part_cols]
-        # physical names at EVERY nesting level (nested struct fields
-        # carry col-<uuid> physical names under creation-time mapping),
-        # plus PARQUET:field_id metadata so pyarrow writes parquet
-        # field ids — id-mode JVM readers resolve columns BY ID and see
-        # nulls in files without them
-        import pyarrow as pa
-        from delta_spark.schema import physical_schema as _physchema
-
-        phys_fields = _physchema(tschema, with_field_ids=True).fields
-        data_fields = [
-            pf for lf, pf in zip(tschema.fields, phys_fields)
-            if lf.name not in set(self.part_cols)]
-
-        def attach_ids(af: "pa.Field", sf: T.StructField) -> "pa.Field":
-            dt, at = sf.dataType, af.type
-            if isinstance(dt, T.StructType) and pa.types.is_struct(at):
-                at = pa.struct([attach_ids(at.field(i), dt.fields[i])
-                                for i in range(at.num_fields)])
-            elif isinstance(dt, T.ArrayType) and pa.types.is_list(at):
-                inner = attach_ids(
-                    pa.field("element", at.value_type),
-                    T.StructField("element", dt.elementType))
-                at = pa.list_(inner.type)
-            elif isinstance(dt, T.MapType) and pa.types.is_map(at):
-                kt = attach_ids(pa.field("key", at.key_type),
-                                T.StructField("key", dt.keyType)).type
-                vt = attach_ids(pa.field("value", at.item_type),
-                                T.StructField("value", dt.valueType)).type
-                at = pa.map_(kt, vt)
-            fid = (sf.metadata or {}).get("parquet.field.id")
-            md = ({b"PARQUET:field_id": str(fid).encode()}
-                  if fid is not None else None)
-            return pa.field(af.name, at, af.nullable, md)
-
-        plain = to_arrow_schema(T.StructType(data_fields))
-        target = pa.schema([attach_ids(plain.field(i), data_fields[i])
-                            for i in range(len(data_fields))])
-        data_logical = [f.name for f in tschema.fields
-                        if f.name not in set(self.part_cols)]
-
-        writers: dict[tuple, tuple] = {}  # pvals-tuple -> (writer, abs, pvals)
-
-        def sink_for(pvals: dict) -> tuple:
-            key = tuple(sorted(pvals.items()))
-            if key not in writers:
-                rel_dir = partition_path(pvals, part_phys)
-                final_dir = os.path.join(self.path, rel_dir) \
-                    if rel_dir else self.path
-                os.makedirs(final_dir, exist_ok=True)
-                name = f"part-{uuid4().hex}.snappy.parquet"
-                abs_path = os.path.join(final_dir, name)
-                writers[key] = (pq.ParquetWriter(abs_path, target),
-                                abs_path, dict(pvals))
-            return writers[key]
-
-        for batch in it:
-            tbl = pa.Table.from_batches([batch])
-            for c in self.not_null:
-                if tbl.column(c).null_count:
-                    raise ValueError(
-                        f"NOT NULL constraint violated for column {c}")
-            if self.part_cols:
-                combos = (tbl.select(self.part_cols)
-                          .group_by(self.part_cols).aggregate([])
-                          .to_pylist())
-            else:
-                combos = [{}]
-            for combo in combos:
-                mask = None
-                for c, v in combo.items():
-                    cond = (pc.is_null(tbl.column(c)) if v is None
-                            else pc.equal(tbl.column(c), pa.scalar(
-                                v, type=tbl.schema.field(c).type)))
-                    cond = pc.fill_null(cond, False)
-                    mask = cond if mask is None else pc.and_(mask, cond)
-                sub = tbl.filter(mask) if mask is not None else tbl
-                pvals = {self.l2p.get(c, c): serialize_partition_value(
-                    combo[c], types[c]) for c in combo}
-                writer, _, _ = sink_for(pvals)
-                out = sub.select(data_logical)
-                out = out.rename_columns(
-                    [self.l2p.get(c, c) for c in data_logical])
-                arrays = [
-                    _arrow_view_names(out.column(i),
-                                      target.field(i).type)
-                    .cast(target.field(i).type)
-                    for i in range(out.num_columns)]
-                writer.write_table(pa.Table.from_arrays(
-                    arrays, schema=target))
-
-        files = []
-        idx_cols = stats_columns(self.cfg)
-        if idx_cols is not None:
-            idx_cols = [self.l2p.get(c, c) for c in idx_cols]
-        try:
-            n_idx = int(self.cfg.get("delta.dataSkippingNumIndexedCols",
-                                     DEFAULT_NUM_INDEXED_COLS))
-        except (TypeError, ValueError):
-            n_idx = DEFAULT_NUM_INDEXED_COLS
-        for writer, abs_path, pvals in writers.values():
-            writer.close()
-            files.append({
-                "rel": os.path.relpath(abs_path, self.path).replace(os.sep, "/"),
-                "pvals": pvals,
-                "size": os.path.getsize(abs_path),
-                "mtime": file_mtime_ms(abs_path),
-                "stats": collect_file_stats(abs_path, idx_cols, n_idx),
-            })
-        return _WriteTaskResult(files=files)
-
-    def commit(self, messages) -> None:
-        self._commit_batch(messages)
-
-    def _commit_batch(self, messages, op: str = "WRITE",
-                      txn_app_id: Optional[str] = None,
-                      txn_batch: Optional[int] = None) -> None:
-        from delta_spark.actions import (
-            AddFile,
-            Metadata,
-            RemoveFile,
-            SetTransaction,
-        )
-        from delta_spark.transaction import OptimisticTransaction
-        from delta_spark.util import current_time_millis, encode_log_path
-
-        part_phys = [self.l2p.get(c, c) for c in self.part_cols]
-        adds, rows, nbytes = [], 0, 0
-        for msg in messages:
-            for f in (msg.files if msg else []):
-                adds.append(AddFile(
-                    path=encode_log_path(f["rel"]),
-                    partitionValues={c: f["pvals"].get(c) for c in part_phys},
-                    size=f["size"], modificationTime=f["mtime"],
-                    dataChange=True, stats=f["stats"]))
-                nbytes += f["size"]
-                try:
-                    rows += json.loads(f["stats"] or "{}").get("numRecords", 0)
-                except Exception:
-                    pass
-        log = DeltaLog.for_table(self.path)
-        txn = OptimisticTransaction(log)
-        # existence re-checked per commit: a streaming writer instance
-        # outlives its first microbatch, which may have created the table
-        exists = txn.snapshot.version >= 0
-        actions: list = []
-        if txn_app_id is not None and txn_batch is not None:
-            # exactly-once inside the SAME transaction whose snapshot the
-            # conflict checker validates (DeltaSink.addBatch /
-            # io.write_delta's txnAppId check) — no TOCTOU window
-            last = txn.txn_version(txn_app_id)
-            if last is not None and txn_batch <= last:
-                self._drop_orphans(messages)
-                return
-            actions.append(SetTransaction(
-                appId=txn_app_id, version=txn_batch,
-                lastUpdated=current_time_millis()))
-        if not exists:
-            actions.append(Metadata(
-                schemaString=self.table_schema_json,
-                partitionColumns=list(self.part_cols),
-                configuration=dict(self.cfg),
-                createdTime=current_time_millis()))
-        removes: list = []
-        if self.overwrite and exists:
-            now = current_time_millis()
-            removes = [RemoveFile(
-                path=f.path, deletionTimestamp=now, dataChange=True,
-                partitionValues=f.partitionValues, size=f.size)
-                for f in txn.snapshot.all_files]
-        metrics = {"numFiles": str(len(adds)),
-                   "numOutputRows": str(rows),
-                   "numOutputBytes": str(nbytes)}
-        txn.commit(actions + adds + removes,
-                   op,
-                   {"mode": "Overwrite" if self.overwrite else "Append",
-                    "partitionBy": json.dumps(self.part_cols)},
-                   metrics)
-
-    def abort(self, messages) -> None:
-        self._drop_orphans(messages)
-
-    def _drop_orphans(self, messages) -> None:
-        for msg in messages:
-            for f in (msg.files if msg else []):
-                try:
-                    os.remove(os.path.join(self.path, f["rel"]))
-                except OSError:
-                    pass
-
-
-class DeltaStreamArrowWriter(DeltaArrowBatchWriter, DataSourceStreamArrowWriter):
-    """Streaming sink half: `df.writeStream.format("delta_py")`.
-    Per-microbatch transactional appends (Complete mode = per-batch
-    overwrite) with the reference sink's exactly-once contract
-    (DeltaSink.scala:108): each commit carries
-    SetTransaction(appId, batchId) and a replayed batch is skipped —
-    its already-written files are deleted as orphans. The appId comes
-    from the `txnAppId` option, else the stream's checkpointLocation,
-    else the sink path (two distinct streams into one sink should set
-    txnAppId explicitly)."""
-
-    def __init__(self, schema, options, overwrite: bool):
-        DeltaArrowBatchWriter.__init__(self, schema, options, overwrite)
-        self.app_id = (options.get("txnappid")
-                       or options.get("checkpointlocation")
-                       or f"delta_py_sink::{os.path.abspath(self.path)}")
-
-    def commit(self, messages, batchId: int) -> None:
-        self._commit_batch(messages, op="STREAMING UPDATE",
-                           txn_app_id=self.app_id, txn_batch=batchId)
-
-    def abort(self, messages, batchId: int) -> None:
-        self._drop_orphans(messages)
-
-
 def _pinned_snapshot(log, options):
     """Batch-read snapshot pinning: versionAsOf / timestampAsOf options
     (DeltaOptions.scala:355-356, DeltaTimeTravelSpec)."""
@@ -1371,7 +1037,10 @@ def _pinned_snapshot(log, options):
 
 class DeltaPyDataSource(DataSource):
     """`spark.readStream.format("delta_py").option("path", p)` — the
-    Python-DataSource packaging of the streaming source."""
+    Python-DataSource packaging of the streaming source, plus a batch
+    snapshot reader. Read-only: batch writes go through
+    `delta_spark.io.write_delta`, streams through `write_stream` /
+    `delta_sink`."""
 
     @classmethod
     def name(cls) -> str:
@@ -1403,12 +1072,6 @@ class DeltaPyDataSource(DataSource):
                 "DeltaTable.table_changes() / the table_changes() TVF; "
                 "the delta_py batch reader serves current-snapshot rows")
         return DeltaBatchReader(schema, self.options)
-
-    def writer(self, schema, overwrite: bool):
-        return DeltaArrowBatchWriter(schema, self.options, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool):
-        return DeltaStreamArrowWriter(schema, self.options, overwrite)
 
 
 def register(spark: SparkSession) -> None:

@@ -24,6 +24,28 @@ def test_sink_exactly_once(spark, tmp_table, sf_dir, tmp_path):
     dt = DeltaTable.forPath(spark, tmp_table)
     assert dt.toDF().count() == 150
 
+    # complete mode: batch 0 creates a partitioned table, each batch
+    # replaces the table, and a replayed batch changes nothing
+    out = str(tmp_path / "complete")
+    full = delta_sink(out, query_id="q2", output_mode="complete",
+                      partition_by=["event_type"])
+    full(events.filter("event_id < 40"), batch_id=0)
+    full(events.filter("event_id < 10"), batch_id=1)
+    full(events.filter("event_id < 30"), batch_id=1)
+    snap = DeltaLog.for_table(out).update()
+    assert snap.version == 1
+    assert snap.partition_columns == ["event_type"]
+    dt2 = DeltaTable.forPath(spark, out)
+    assert sorted(r["event_id"] for r in dt2.toDF().collect()) == \
+        sorted(r["event_id"] for r in events.filter("event_id < 10").collect())
+    h = dt2.history().collect()[0]
+    assert h["operation"] == "STREAMING UPDATE"
+    assert h["operationParameters"]["mode"] == "Overwrite"
+    # DeltaSink accepts only Append and Complete: an "update" batch holds
+    # only the changed rows, so overwriting with it would lose the rest
+    with pytest.raises(ValueError, match="output_mode"):
+        delta_sink(out, query_id="q3", output_mode="update")
+
 
 def test_streaming_source_reads_table(spark, tmp_table, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
@@ -704,119 +726,6 @@ def test_batch_datasource_read_column_mapping(spark, tmp_table, sf_dir):
                - float(want)) < 1e-6
 
 
-def test_batch_datasource_write_roundtrip(spark, tmp_path, sf_dir):
-    """df.write.format('delta_py'): new partitioned table, append,
-    overwrite — committed through the same transaction layer, readable
-    by the native path, stats collected for pruning."""
-    from delta_spark.streaming import register
-
-    register(spark)
-    li = load_table(spark, sf_dir, "lineitem").limit(600)
-    p = str(tmp_path / "w")
-    (li.write.format("delta_py").mode("append")
-       .option("path", p).option("partitionBy", "l_returnflag").save())
-    dt = DeltaTable.forPath(spark, p)
-    assert dt.toDF().count() == 600
-    snap = DeltaLog.for_table(p).update()
-    assert snap.partition_columns == ["l_returnflag"]
-    assert all(f.stats for f in snap.all_files)
-    # pruning works on the collected stats/partition values
-    assert len(snap.files_for_scan("l_returnflag = 'A'")) < snap.num_files
-
-    li.limit(50).write.format("delta_py").mode("append") \
-        .option("path", p).save()
-    assert dt.toDF().count() == 650
-    # exceptAll parity with the native reader
-    want = li.unionAll(li.limit(50))
-    assert dt.toDF().exceptAll(want).count() == 0
-    assert want.exceptAll(dt.toDF()).count() == 0
-
-    li.limit(10).write.format("delta_py").mode("overwrite") \
-        .option("path", p).save()
-    assert dt.toDF().count() == 10
-    assert dt.asOfVersion(1).count() == 650
-    h = dt.history().collect()
-    assert h[0]["operation"] == "WRITE"
-    assert h[0]["operationParameters"]["mode"] == "Overwrite"
-
-
-def test_batch_datasource_write_guards(spark, tmp_path, sf_dir):
-    """Writer guards: NOT NULL enforced executor-side; tables needing
-    expression evaluation (identity columns) are rejected up front."""
-    import pyspark.errors as PE
-
-    from delta_spark.streaming import register
-
-    register(spark)
-    p = str(tmp_path / "g")
-    dt = (DeltaTable.create(spark).location(p)
-          .addColumn("k", "bigint", nullable=False)
-          .addColumn("v", "string").execute())
-    ok = spark.createDataFrame([(1, "a")], "k long, v string")
-    ok.write.format("delta_py").mode("append").option("path", p).save()
-    assert dt.toDF().count() == 1
-    bad = spark.createDataFrame([(None, "x")], "k long, v string")
-    with pytest.raises(Exception, match="NOT NULL"):
-        bad.write.format("delta_py").mode("append").option("path", p).save()
-    assert dt.toDF().count() == 1  # failed job committed nothing
-
-    p2 = str(tmp_path / "g2")
-    (DeltaTable.create(spark).location(p2)
-     .addColumn("id", "bigint", generatedAlwaysAs="k + 1")
-     .addColumn("k", "bigint").execute())
-    df2 = spark.createDataFrame([(1, 2)], "id long, k long")
-    with pytest.raises(Exception, match="write_delta"):
-        df2.write.format("delta_py").mode("append").option("path", p2).save()
-
-
-def test_stream_writer_datasource_exactly_once(spark, tmp_path, sf_dir):
-    """writeStream.format('delta_py'): native streaming sink with the
-    DeltaSink SetTransaction(appId, batchId) exactly-once contract."""
-    from delta_spark.streaming import DeltaStreamArrowWriter, register
-
-    register(spark)
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts",
-                                                    "user_id", "value")
-    src, out, ck = (str(tmp_path / n) for n in ("src", "out", "ck"))
-    write_delta(ev.limit(100), src)
-    write_delta(ev.limit(50), src, mode="append")
-
-    def drain():
-        q = (read_stream(spark, src).writeStream.format("delta_py")
-             .option("path", out).option("checkpointLocation", ck)
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        assert q.exception() is None, q.exception()
-
-    drain()
-    dt = DeltaTable.forPath(spark, out)
-    assert dt.toDF().count() == 150
-    assert dt.history().collect()[0]["operation"] == "STREAMING UPDATE"
-    # restart with no new data: nothing double-commits
-    drain()
-    assert dt.toDF().count() == 150
-
-    # a replayed microbatch is skipped and its orphan files removed
-    w = DeltaStreamArrowWriter(ev.schema, {"path": out,
-                                           "checkpointlocation": ck}, False)
-    last = DeltaLog.for_table(out).update().set_transactions[w.app_id].version
-    import glob as _glob
-    import shutil as _shutil
-
-    donor = next(f for f in _glob.glob(os.path.join(out, "*.parquet")))
-    orphan = os.path.join(out, "replayed-orphan.parquet")
-    _shutil.copy(donor, orphan)
-
-    class _Msg:
-        files = [{"rel": "replayed-orphan.parquet", "pvals": {},
-                  "size": 1, "mtime": 1, "stats": None}]
-
-    before = DeltaLog.for_table(out).update().version
-    w.commit([_Msg()], batchId=last)          # replay of the last batch
-    assert DeltaLog.for_table(out).update().version == before
-    assert not os.path.exists(orphan)
-
-
 def test_stream_source_applies_deletion_vectors(spark, tmp_table, sf_dir, tmp_path):
     """The initial-snapshot scan must not resurrect DV-masked rows
     (DeltaParquetFileFormat row-filter semantics on the source)."""
@@ -840,25 +749,6 @@ def test_stream_source_applies_deletion_vectors(spark, tmp_table, sf_dir, tmp_pa
     assert q.exception() is None, q.exception()
     got = spark.sql("SELECT count(*) c FROM dv_stream").collect()[0]["c"]
     assert got == want
-
-
-def test_batch_writer_rejects_unsupported_options(spark, tmp_path, sf_dir):
-    """replaceWhere / dynamic partition overwrite / conflicting
-    partitionBy must fail loudly, not silently change semantics."""
-    from delta_spark.streaming import register
-
-    register(spark)
-    li = load_table(spark, sf_dir, "lineitem").limit(50)
-    p = str(tmp_path / "t")
-    (li.write.format("delta_py").mode("append").option("path", p)
-       .option("partitionBy", "l_returnflag").save())
-    with pytest.raises(Exception, match="write_delta"):
-        (li.write.format("delta_py").mode("overwrite").option("path", p)
-           .option("replaceWhere", "l_returnflag = 'A'").save())
-    with pytest.raises(Exception, match="partitioning"):
-        (li.write.format("delta_py").mode("append").option("path", p)
-           .option("partitionBy", "l_linestatus").save())
-    assert DeltaTable.forPath(spark, p).toDF().count() == 50
 
 
 def test_streaming_starting_version_latest(spark, tmp_table, sf_dir, tmp_path):
@@ -1028,22 +918,27 @@ def test_available_now_with_caps_requires_acknowledgment(spark, tmp_table,
 
 
 def test_datasource_nested_column_mapping_roundtrip(spark, tmp_path):
-    """format('delta_py') read AND write on an id-mode table with
-    nested structs: files store physical nested names + parquet field
-    ids at every level (pyarrow casts match struct children by name,
-    so the Arrow paths rename structurally via Array.view; the Arrow
-    writer stamps PARQUET:field_id metadata — id-mode JVM readers
-    resolve by id and read files without them as all-null, which is
-    exactly the bug this pins)."""
-    from delta_spark.io import write_delta
-    from delta_spark.table import DeltaTable
+    """format('delta_py') read on an id-mode table with nested structs:
+    files store physical nested names + parquet field ids at every
+    level (pyarrow casts match struct children by name, so the Arrow
+    reader renames structurally via Array.view; id-mode JVM readers
+    resolve by id and read files without ids as all-null). The source
+    is read-only: a `write.format('delta_py')` fails and commits
+    nothing."""
+    import pyspark.errors as PE
 
+    from delta_spark.streaming import register
+
+    register(spark)
     t = str(tmp_path / "nested_cm")
     write_delta(spark.sql("SELECT 1 AS id, named_struct('aa', 5, 'ab', 'x') AS s"),
                 t, configuration={"delta.columnMapping.mode": "id"})
-    # Arrow batch writer append
-    (spark.sql("SELECT 2 AS id, named_struct('aa', 7, 'ab', 'y') AS s")
-     .write.format("delta_py").mode("append").save(t))
+    write_delta(spark.sql("SELECT 2 AS id, named_struct('aa', 7, 'ab', 'y') AS s"),
+                t, mode="append")
+    with pytest.raises(PE.AnalysisException):
+        (spark.sql("SELECT 3 AS id, named_struct('aa', 9, 'ab', 'z') AS s")
+         .write.format("delta_py").mode("append").save(t))
+    assert DeltaLog.for_table(t).update().version == 1
     want = [(1, 5, "x"), (2, 7, "y")]
     # JVM read path
     got = sorted((r["id"], r["s"]["aa"], r["s"]["ab"])
@@ -1053,15 +948,13 @@ def test_datasource_nested_column_mapping_roundtrip(spark, tmp_path):
     got_ds = sorted((r["id"], r["s"]["aa"], r["s"]["ab"])
                     for r in spark.read.format("delta_py").load(t).collect())
     assert got_ds == want
-    # the Arrow-written file carries nested physical names + field ids
-    import os as _os
+    # every file carries nested physical names + field ids
     import pyarrow.parquet as pq
-    from delta_spark.log import DeltaLog
     from delta_spark.schema import physical_name
     snap = DeltaLog.for_table(t).update()
     s_phys = physical_name(snap.schema["s"])
     for f in snap.all_files:
-        sch = pq.read_schema(_os.path.join(t, f.path))
+        sch = pq.read_schema(os.path.join(t, f.path))
         sf = sch.field(s_phys)
         assert all(sf.type.field(i).name.startswith("col-")
                    for i in range(sf.type.num_fields))
